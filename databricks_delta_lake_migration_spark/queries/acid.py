@@ -452,10 +452,10 @@ def q101_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         properties={"enableDeletionVectors": "true"},
     )
     t.append(target)
-    files_before = {f.path for f in t._replay()[0]}
+    files_before = {f.path for f in t.snapshot().files}
     t.delete("o_totalprice < 50000")
     t.delete("o_orderstatus = 'O'")
-    files_after = {f.path for f in t._replay()[0]}
+    files_after = {f.path for f in t.snapshot().files}
     dv_present = t.detail()["numDeletionVectorFiles"] > 0
     t.optimize()
     dv_purged = t.detail()["numDeletionVectorFiles"] == 0
@@ -625,10 +625,10 @@ def q105_rename_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = _orders_subset(spark, sf_dir)
     t = LogTable.create(spark, _scratch("colmap"), target.schema)
     t.append(target)
-    files_before = {f.path for f in t._replay()[0]}
+    files_before = {f.path for f in t.snapshot().files}
     t.rename_column("o_totalprice", "price")
     t.drop_column("o_orderstatus")
-    files_after = {f.path for f in t._replay()[0]}
+    files_after = {f.path for f in t.snapshot().files}
     metadata_only = files_before == files_after
     t.update("o_orderkey % 5 = 0", {"price": "price * 2"})
     t.delete("o_orderkey % 7 = 0")
@@ -755,7 +755,7 @@ def q111_convert_to_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     files_before = set(glob.glob(f"{src}/**/*.parquet", recursive=True))
     t = LogTable.convert(spark, src)
-    zero_copy = {f.abspath(t.path) for f in t._replay()[0]} == files_before
+    zero_copy = {f.abspath(t.path) for f in t.snapshot().files} == files_before
     t.update("o_orderkey % 5 = 0", {"o_totalprice": "o_totalprice * 2"})
     t.delete("o_orderkey % 7 = 0")
     return t.read().withColumn("zero_copy", F.lit(zero_copy))
@@ -1759,7 +1759,7 @@ def q167_fsck_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(4):
         t.append(target.filter(F.col("o_orderkey") % 4 == i))
     files = sorted(
-        f.path for f in t._replay()[0]
+        f.path for f in t.snapshot().files
     )
     victim = files[0]
     victim_rows = (
@@ -1832,7 +1832,7 @@ def q168_symlink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         for m in manifests
         for p in open(m).read().splitlines()
     )
-    active = sorted(f.abspath(t.path) for f in t._replay()[0])
+    active = sorted(f.abspath(t.path) for f in t.snapshot().files)
     exact = listed == active
     plain = spark.read.parquet(*listed).count() == t.read().count()
 
@@ -1841,7 +1841,7 @@ def q168_symlink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     listed2 = sorted(
         p for m in manifests2 for p in open(m).read().splitlines()
     )
-    active2 = sorted(f.abspath(t.path) for f in t._replay()[0])
+    active2 = sorted(f.abspath(t.path) for f in t.snapshot().files)
     refreshed = listed2 == active2 and listed2 != listed
 
     # partitioned shape: one manifest per partition dir

@@ -474,11 +474,13 @@ def q18_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     prev_ts = F.lag("ts").over(order_w)
+    # exact microsecond gap, like the oracle's `> INTERVAL 30 MINUTE`:
+    # whole-second casts would keep a 1800.31 s gap in one session
     marked = e.withColumn(
         "new_session",
         F.when(
             prev_ts.isNull()
-            | (F.col("ts").cast("long") - prev_ts.cast("long") > 1800),
+            | (F.unix_micros("ts") - F.unix_micros(prev_ts) > 1800 * 1_000_000),
             1,
         ).otherwise(0),
     )

@@ -70,17 +70,16 @@ def _append_batch(
 
     from ..tables.logtable import Commit
 
+    snap = tbl.snapshot()
     aligned = df.select(
-        *[F.col(f.name).cast(f.dataType) for f in tbl.schema().fields]
+        *[F.col(f.name).cast(f.dataType) for f in snap.schema.fields]
     )
     if _SINK_PLAN_PROBE is not None:
         _SINK_PLAN_PROBE.append(
             aligned._jdf.queryExecution().executedPlan().toString()
         )
-    aligned = tbl._maybe_optimize_write(
-        aligned, tbl.partition_columns(), tbl.properties()
-    )
-    entries = tbl._write_files(aligned, tbl.partition_columns())
+    aligned = tbl._maybe_optimize_write(snap, aligned)
+    entries = tbl._write_files(snap, aligned)
     params = {"streamId": stream_id, "batchId": int(batch_id)}
     if extra_params:
         params.update(extra_params)
@@ -1347,10 +1346,11 @@ def stream_pit_enrich(
             tbl = LogTable.create(spark, table_path, enriched.schema)
         if batch_id <= _last_committed_batch(tbl, stream_id):
             return
+        snap = tbl.snapshot()
         aligned = enriched.select(
-            *[F.col(f.name).cast(f.dataType) for f in tbl.schema().fields]
+            *[F.col(f.name).cast(f.dataType) for f in snap.schema.fields]
         )
-        entries = tbl._write_files(aligned, tbl.partition_columns())
+        entries = tbl._write_files(snap, aligned)
         tbl._commit(
             Commit(
                 version=tbl._next_version(),

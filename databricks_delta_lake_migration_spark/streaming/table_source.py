@@ -44,10 +44,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-LOG_DIR = "_log"
-CHANGES_DIR = "_changes"
-MAPPING_PROP = "columnmapping.map"
-CDF_PROP = "enableChangeDataFeed"
+from ..tables.logtable import CDF_PROP, CHANGES_DIR, LOG_DIR, LogTable, _fold_props
+
 CDF_FIELDS = [
     {"name": "_change_type", "type": "string", "nullable": True,
      "metadata": {}},
@@ -59,100 +57,6 @@ CDF_FIELDS = [
 
 # rewrite-only maintenance: adds carry no new data (Delta dataChange=false)
 _DATA_UNCHANGED_OPS = {"OPTIMIZE", "ZORDER"}
-
-# ops whose commit carries the FULL post-op property map (mirror of
-# logtable._PROPS_REPLACE_OPS — kept in lockstep so the pure-python
-# planner folds properties identically to the engine)
-_PROPS_REPLACE_OPS = {
-    "UNSET TBLPROPERTIES", "RENAME COLUMN", "DROP COLUMN",
-    "RESTORE", "ALTER COLUMN", "DROP FEATURE",
-}
-
-
-class _PlainLog:
-    """Pure-python commit-log reader: folds schema / properties / adds
-    without a SparkSession (the data source's planning worker has
-    none). Checkpoint-aware for prefix-pruned logs."""
-
-    def __init__(self, path: str):
-        self.path = path
-        self.log = os.path.join(path, LOG_DIR)
-        if not os.path.isdir(self.log):
-            raise FileNotFoundError(f"not a log table: {path}")
-
-    def versions(self) -> list[int]:
-        return sorted(
-            int(n.split(".")[0])
-            for n in os.listdir(self.log)
-            if n.endswith(".json")
-        )
-
-    def commit(self, v: int) -> dict:
-        with open(os.path.join(self.log, f"{v:020d}.json")) as fh:
-            return json.load(fh)
-
-    def walk(self):
-        """Yield ``(version, commit, props_after_version)`` in commit
-        order, properties seeded from the newest checkpoint when the
-        log prefix was pruned — the per-version twin of ``state()``,
-        used where a property's value AT a version matters (e.g. was
-        CDF enabled when commit v ran?)."""
-        vs = self.versions()
-        props: dict = {}
-        if vs and vs[0] != 0:
-            cps = sorted(
-                int(n.split(".")[0])
-                for n in os.listdir(self.log)
-                if n.endswith(".checkpoint")
-            )
-            base = [c for c in cps if c <= vs[0]]
-            if base:
-                with open(
-                    os.path.join(self.log, f"{base[-1]:020d}.checkpoint")
-                ) as fh:
-                    props = dict(json.load(fh).get("properties") or {})
-        for v in vs:
-            c = self.commit(v)
-            if c.get("properties") is not None:
-                if c.get("operation") in _PROPS_REPLACE_OPS:
-                    props = dict(c["properties"])
-                else:
-                    props.update(c["properties"])
-            yield v, c, props
-
-    def state(self) -> tuple[str, dict]:
-        """(schema_json, properties) at the latest version, seeded from
-        the newest checkpoint when the log prefix was pruned."""
-        vs = self.versions()
-        schema, props = None, {}
-        if vs and vs[0] != 0:
-            cps = sorted(
-                int(n.split(".")[0])
-                for n in os.listdir(self.log)
-                if n.endswith(".checkpoint")
-            )
-            base = [c for c in cps if c <= vs[0]]
-            if base:
-                with open(
-                    os.path.join(self.log, f"{base[-1]:020d}.checkpoint")
-                ) as fh:
-                    st = json.load(fh)
-                schema, props = st.get("schema"), dict(
-                    st.get("properties") or {}
-                )
-        for v in vs:
-            c = self.commit(v)
-            if c.get("schema"):
-                schema = c["schema"]
-            if c.get("properties") is not None:
-                # replace-ops carry the full post-op map
-                if c.get("operation") in _PROPS_REPLACE_OPS:
-                    props = dict(c["properties"])
-                else:
-                    props.update(c["properties"])
-        if schema is None:
-            raise FileNotFoundError(f"no schema in log: {self.path}")
-        return schema, props
 
 
 class _FileSlice(InputPartition):
@@ -206,17 +110,21 @@ class LogTableStreamReader(DataSourceStreamReader):
         return {"version": self.starting - 1}
 
     def latestOffset(self) -> dict:
-        vs = _PlainLog(self.path).versions()
-        return {"version": vs[-1] if vs else -1}
+        # listing only: the head version is the newest commit file name
+        names = os.listdir(os.path.join(self.path, LOG_DIR))
+        vs = [int(n.split(".")[0]) for n in names if n.endswith(".json")]
+        return {"version": max(vs, default=-1)}
 
     def partitions(self, start: dict, end: dict):
-        log = _PlainLog(self.path)
-        schema_json, props = log.state()
+        # snapshot resolution is metadata I/O and needs no SparkSession
+        # (the planning worker has none)
+        log = LogTable(None, self.path)
+        cs = log.commits()
         if self.cdf:
-            return self._cdf_partitions(log, schema_json, props, start, end)
-        mapping = json.loads(props.get(MAPPING_PROP, "{}"))
-        inv = {phys: logical for logical, phys in mapping.items()}
-        have = set(log.versions())
+            return self._cdf_partitions(log, cs, start, end)
+        snap = log.snapshot()
+        inv = {phys: logical for logical, phys in snap.column_mapping.items()}
+        have = {c.version: c for c in cs}
         out = []
         for v in range(start["version"] + 1, end["version"] + 1):
             if v < 0:
@@ -231,11 +139,9 @@ class LogTableStreamReader(DataSourceStreamReader):
                     "but the commit log has been pruned past it; restart "
                     f"with startingVersion >= {min(have) if have else 0}"
                 )
-            c = log.commit(v)
-            op = c.get("operation", "")
-            changes = bool(c.get("remove")) or bool(
-                c.get("deletionVectors")
-            )
+            c = have[v]
+            op = c.operation
+            changes = bool(c.remove) or bool(c.dvs)
             if changes and op in _DATA_UNCHANGED_OPS:
                 continue  # compaction rewrite: data unchanged, skip
             if changes and not self.ignore_changes:
@@ -245,19 +151,18 @@ class LogTableStreamReader(DataSourceStreamReader):
                     "newer startingVersion or set ignoreChanges=true "
                     "(downstream must then tolerate re-delivered rows)"
                 )
-            for f in c.get("add", []):
-                rel = f["path"]
+            for f in c.add:
                 out.append(
                     _FileSlice(
-                        os.path.join(f.get("base") or self.path, rel),
-                        _parse_partition_values(rel),
+                        os.path.join(f.base or self.path, f.path),
+                        _parse_partition_values(f.path),
                         inv,
-                        schema_json,
+                        snap.schema_json,
                     )
                 )
         return out
 
-    def _cdf_partitions(self, log, schema_json, props, start, end):
+    def _cdf_partitions(self, log, cs, start, end):
         """Streaming CHANGE DATA FEED (Delta's
         ``readChangeFeed=true`` streaming source): each micro-batch
         carries the row-level change files of the commits in
@@ -272,21 +177,24 @@ class LogTableStreamReader(DataSourceStreamReader):
         non-CDF pruned-history error). Change files store the full row
         plus the three CDF columns and are unpartitioned, so no value
         re-injection."""
-        if props.get(CDF_PROP, "false") != "true":
+        # was CDF enabled when commit v ran? Fold per version from the
+        # oldest retained one (resolved first: it seeds the head)
+        props = log.snapshot(cs[0].version).props
+        commits = {c.version: c for c in cs}
+        cdf_on: dict[int, bool] = {}
+        for c in cs:
+            props = _fold_props(props, c)  # idempotent on cs[0]
+            cdf_on[c.version] = props.get(CDF_PROP, "false") == "true"
+        snap = log.snapshot()
+        if snap.props.get(CDF_PROP, "false") != "true":
             raise RuntimeError(
                 f"{CDF_PROP} is not enabled on {self.path} — streaming "
                 "readChangeFeed requires it"
             )
-        sch = json.loads(schema_json)
+        sch = json.loads(snap.schema_json)
         sch["fields"] = list(sch["fields"]) + CDF_FIELDS
         cdf_schema_json = json.dumps(sch)
-        mapping = json.loads(props.get(MAPPING_PROP, "{}"))
-        inv = {phys: logical for logical, phys in mapping.items()}
-        commits: dict[int, dict] = {}
-        cdf_on: dict[int, bool] = {}
-        for v, c, props_v in log.walk():
-            commits[v] = c
-            cdf_on[v] = props_v.get(CDF_PROP, "false") == "true"
+        inv = {phys: logical for logical, phys in snap.column_mapping.items()}
         out = []
         for v in range(start["version"] + 1, end["version"] + 1):
             if v < 0:
@@ -304,9 +212,8 @@ class LogTableStreamReader(DataSourceStreamReader):
                 # compaction rewrites (dataChange=false) never emit
                 # change files — their absence is not data loss
                 mutated = bool(
-                    c.get("add") or c.get("remove")
-                    or c.get("deletionVectors")
-                ) and c.get("operation", "") not in _DATA_UNCHANGED_OPS
+                    c.add or c.remove or c.dvs
+                ) and c.operation not in _DATA_UNCHANGED_OPS
                 if mutated and cdf_on[v]:
                     raise RuntimeError(
                         f"change files for version {v} of {self.path} "
@@ -374,8 +281,7 @@ class LogTableStreamDataSource(DataSource):
         return "logtable_stream"
 
     def schema(self):
-        schema_json, _ = _PlainLog(self.options["path"]).state()
-        sch = json.loads(schema_json)
+        sch = json.loads(LogTable(None, self.options["path"]).snapshot().schema_json)
         if str(self.options.get("readchangefeed", "false")).lower() == "true":
             sch["fields"] = list(sch["fields"]) + CDF_FIELDS
         return StructType.fromJson(sch)

@@ -296,7 +296,7 @@ def run_maintenance(
     import time as _time
 
     now = _time.time() if now_epoch is None else now_epoch
-    props = table.properties()
+    props = table.snapshot().props
     last = float(props.get(LAST_RUN_PROP, "0") or 0)
     due = force or (now - last) >= config.optimize_interval_hours * 3600
     if not due:
@@ -345,7 +345,7 @@ def _touched_partition_scope(
     first-column superset); ``(None, False)`` = nothing touched."""
     from .logtable import _partition_values
 
-    parts = table.partition_columns()
+    parts = table.snapshot().partition_by
     if not parts:
         return None, True
     touched: set[str | None] = set()

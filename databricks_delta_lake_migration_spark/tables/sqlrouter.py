@@ -773,11 +773,7 @@ def route(cat: "Catalog", query: str) -> DataFrame | None:
             # positionally before Spark parses the literal rows. Only a
             # whole top-level element spells the keyword, so string
             # literals containing the word are untouched.
-            defaults = {
-                k.removeprefix("default."): v
-                for k, v in t.properties().items()
-                if k.startswith("default.")
-            }
+            defaults = t.snapshot().column_defaults
             rows = []
             for tup in _split_top(body[6:].strip()):
                 inner = tup.strip()
@@ -840,19 +836,19 @@ def route(cat: "Catalog", query: str) -> DataFrame | None:
         return _one_row(spark, t.optimize(where=where))
 
     if m := _SHOW_PARTITIONS.match(query):
-        t = cat.table(m.group(1))
-        parts = t.partition_columns()
+        snap = cat.table(m.group(1)).snapshot()
+        parts = snap.partition_by
         if not parts:
             raise ValueError(f"{m.group(1)} is not a partitioned table")
         from .logtable import _partition_values
 
-        mapping = t._column_mapping()
+        mapping = snap.column_mapping
         phys = [mapping.get(c, c) for c in parts]
         # metadata-only: values come from the active file paths, no scan
         vals = sorted(
             {
                 tuple(_partition_values(f.path).get(p) for p in phys)
-                for f in t._replay()[0]
+                for f in snap.files
             },
             key=lambda v: tuple((x is None, x or "") for x in v),  # NULLs last
         )
@@ -864,7 +860,8 @@ def route(cat: "Catalog", query: str) -> DataFrame | None:
         if cat._fq(m.group(2)) not in cat._load():
             return None  # temp view / plain name → Spark's own DESCRIBE
         t = cat.table(m.group(2))
-        schema, parts = t.schema(), t.partition_columns()
+        snap = t.snapshot()
+        schema, parts = snap.schema, snap.partition_by
 
         def _row(f):
             return (
@@ -893,7 +890,7 @@ def route(cat: "Catalog", query: str) -> DataFrame | None:
                 ("numFiles", str(d["numFiles"]), ""),
                 ("sizeInBytes", str(d["sizeInBytes"]), ""),
             ]
-            props = t.properties()
+            props = snap.props
             if props:
                 rows.append((
                     "Table Properties",
@@ -915,18 +912,14 @@ def route(cat: "Catalog", query: str) -> DataFrame | None:
     if m := _SHOW_CREATE.match(query):
         if cat._fq(m.group(1)) not in cat._load():
             return None
-        t = cat.table(m.group(1))
+        snap = cat.table(m.group(1)).snapshot()
 
         def _q(s: str) -> str:
             return s.replace("'", "''")
 
-        defaults = {
-            k.removeprefix("default."): v
-            for k, v in t.properties().items()
-            if k.startswith("default.")
-        }
+        defaults = snap.column_defaults
         col_lines = []
-        for f in t.schema().fields:
+        for f in snap.schema.fields:
             line = f"  `{f.name}` {f.dataType.simpleString()}"
             if f.name in defaults:
                 line += f" DEFAULT {defaults[f.name]}"
@@ -941,16 +934,15 @@ def route(cat: "Catalog", query: str) -> DataFrame | None:
             + ",\n".join(col_lines)
             + "\n) USING DELTA"
         )
-        parts = t.partition_columns()
+        parts = snap.partition_by
         if parts:
             stmt += "\nPARTITIONED BY (" + ", ".join(f"`{c}`" for c in parts) + ")"
         from .logtable import CLUSTERING_PROP
 
-        props = dict(t.properties())
         # NOT NULL / DEFAULT are emitted as column clauses, not raw props
         props = {
             k: v
-            for k, v in props.items()
+            for k, v in snap.props.items()
             if not k.startswith(("notnull.", "default."))
         }
         cluster = [c for c in props.pop(CLUSTERING_PROP, "").split(",") if c]

@@ -47,7 +47,7 @@ def _make(spark, tmp_path, partition_by=None, cdf=False):
 
 
 def _data_files(t):
-    return sorted(f.path for f in t._replay()[0])
+    return sorted(f.path for f in t.snapshot().files)
 
 
 def test_dv_delete_does_not_rewrite_files(spark, tmp_path):
@@ -96,7 +96,7 @@ def test_optimize_purges_dvs(spark, tmp_path):
     t.delete("id >= 5")
     res = t.optimize()
     assert res["numFilesRemoved"] >= 1
-    files = t._replay()[0]
+    files = t.snapshot().files
     assert all(not f.dv for f in files)
     assert sum(f.num_records for f in files) == 5  # physically purged
     assert sorted(r.id for r in t.read().collect()) == list(range(5))
@@ -129,7 +129,7 @@ def test_dv_partitioned_table(spark, tmp_path):
     t.delete("part = 'b' and id >= 6")
     assert sorted(r.id for r in t.read().collect()) == [0, 1, 2, 3, 4, 5]
     # partition pruning still applies: only b's file carries a DV
-    dvd = [f for f in t._replay()[0] if f.dv]
+    dvd = [f for f in t.snapshot().files if f.dv]
     assert len(dvd) == 1 and dvd[0].path.startswith("part=b")
 
 
@@ -212,6 +212,6 @@ def test_deep_clone_purges_dvs(spark, tmp_path):
     t.delete("id >= 4")
     c = t.clone(str(tmp_path / "deep"), shallow=False)
     assert sorted(r.id for r in c.read().collect()) == [0, 1, 2, 3]
-    assert all(not f.dv for f in c._replay()[0])
+    assert all(not f.dv for f in c.snapshot().files)
     # fully self-contained: no reference back into the source root
-    assert all(not os.path.isabs(f.path) for f in c._replay()[0])
+    assert all(not os.path.isabs(f.path) for f in c.snapshot().files)

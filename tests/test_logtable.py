@@ -95,10 +95,10 @@ def test_merge_file_pruning_leaves_unmatched_partition_alone(spark, table, monke
 
     monkeypatch.setattr(lt, "MERGE_PRUNE_THRESHOLD_BYTES", 0)  # force probe path
     before = {
-        f.path for f in table._replay()[0] if f.path.startswith("day=d2")
+        f.path for f in table.snapshot().files if f.path.startswith("day=d2")
     }
     table.upsert(rows_df(spark, [(1, "X", 11.0, "d1")]), ["id"])
-    after = {f.path for f in table._replay()[0] if f.path.startswith("day=d2")}
+    after = {f.path for f in table.snapshot().files if f.path.startswith("day=d2")}
     assert before == after  # d2's file not rewritten
 
 
@@ -281,7 +281,7 @@ def test_zorder_tightens_string_stats(spark, scattered):
     t = scattered
 
     def total_width(tbl):
-        files = tbl._replay()[0]
+        files = tbl.snapshot().files
         assert all(f.stats and "user_id" in f.stats for f in files)
         return sum(
             int(f.stats["user_id"][1][:5]) - int(f.stats["user_id"][0][:5])
@@ -445,13 +445,13 @@ def test_data_skipping_num_indexed_cols_property(spark, tmp_path):
         spark, str(tmp_path / "s0"), SCHEMA, properties={STATS_COLS_PROP: "0"}
     )
     t0.append(rows_df(spark, [(1, "A", 1.0, "d1")]).coalesce(1))
-    assert all(f.stats is None for f in t0._replay()[0])
+    assert all(f.stats is None for f in t0.snapshot().files)
 
     t1 = LogTable.create(
         spark, str(tmp_path / "s1"), SCHEMA, properties={STATS_COLS_PROP: "1"}
     )
     t1.append(rows_df(spark, [(1, "A", 1.0, "d1")]).coalesce(1))
-    stats = t1._replay()[0][0].stats
+    stats = t1.snapshot().files[0].stats
     assert "id" in stats and "status" not in stats
     # stats-less files stay un-prunable but fully readable
     assert t0.read(where="id = 99").count() == 0
@@ -491,12 +491,12 @@ def test_optimize_write_and_autocompact(spark, tmp_path):
 
     # repeated single-row appends into d1 only: once d1 crosses 4
     # files, autoCompact folds it back; d2's file is never rewritten
-    d2_file = {f.path for f in t._replay()[0] if "day=d2" in f.path}
+    d2_file = {f.path for f in t.snapshot().files if "day=d2" in f.path}
     for i in range(100, 110):
         t.append(rows_df(spark, [(i, "S", 1.0, "d1")]))
-        d1_files = sum(1 for f in t._replay()[0] if "day=d1" in f.path)
+        d1_files = sum(1 for f in t.snapshot().files if "day=d1" in f.path)
         assert d1_files <= 4, d1_files
-    assert d2_file <= {f.path for f in t._replay()[0]}
+    assert d2_file <= {f.path for f in t.snapshot().files}
     assert t.read().count() == 26
     assert any(
         c.operation == "OPTIMIZE" for c in t.commits()
@@ -559,15 +559,15 @@ def test_partition_scoped_optimize_and_zorder(spark, table):
     for i in range(3):  # d1 small-file debris
         table.append(rows_df(spark, [(100 + i, "S", 1.0, "d1")]))
     d2_before = {
-        f.path for f in table._replay()[0] if "day=d2" in f.path
+        f.path for f in table.snapshot().files if "day=d2" in f.path
     }
     res = table.optimize(where="day = 'd1'")
     assert res["numFilesRemoved"] > 0
-    after = {f.path for f in table._replay()[0]}
+    after = {f.path for f in table.snapshot().files}
     assert d2_before <= after  # d2 untouched
     before = state(table)
     table.zorder(["id"], where="day = 'd1'")
-    assert {f.path for f in table._replay()[0]} >= d2_before  # still untouched
+    assert {f.path for f in table.snapshot().files} >= d2_before  # still untouched
     assert state(table) == before
     with pytest.raises(ValueError, match="partition-column"):
         table.optimize(where="id = 1")  # not a partition column
@@ -743,14 +743,14 @@ def test_merge_stats_pruning_rewrites_only_overlapping_files(spark, tmp_path):
                 [(i, f"v{i}") for i in range(lo, lo + 100)], schema
             ).coalesce(1)
         )
-    files_before = {f.path for f in t._replay()[0]}
+    files_before = {f.path for f in t.snapshot().files}
     assert len(files_before) == 3
-    assert all(f.stats and "id" in f.stats for f in t._replay()[0])
+    assert all(f.stats and "id" in f.stats for f in t.snapshot().files)
 
     src = spark.createDataFrame([(150, "UP"), (199, "UP")], schema)
     res = t.upsert(src, ["id"])
     assert res == {"numUpdatedRows": 2, "numDeletedRows": 0, "numInsertedRows": 0}
-    files_after = {f.path for f in t._replay()[0]}
+    files_after = {f.path for f in t.snapshot().files}
     # files [0,99] and [200,299] survive untouched; only [100,199] rewritten
     assert len(files_before & files_after) == 2
     got = {tuple(r) for r in t.read().filter("id IN (150, 199, 0, 299)").collect()}
@@ -764,16 +764,16 @@ def test_merge_stats_pruning_string_keys_and_inserts(spark, tmp_path):
     t = LogTable.create(spark, str(tmp_path / "sps"), schema)
     t.append(spark.createDataFrame([("a", 1), ("b", 2)], schema).coalesce(1))
     t.append(spark.createDataFrame([("x", 3), ("y", 4)], schema).coalesce(1))
-    files_before = {f.path for f in t._replay()[0]}
+    files_before = {f.path for f in t.snapshot().files}
     # source range ["b","b"] misses file ["x","y"] → that file is pruned
     res = t.upsert(spark.createDataFrame([("b", 20)], schema), ["k"])
     assert res["numUpdatedRows"] == 1 and res["numInsertedRows"] == 0
-    assert len(files_before & {f.path for f in t._replay()[0]}) == 1
+    assert len(files_before & {f.path for f in t.snapshot().files}) == 1
     # unmatched key beyond every file range: pure insert, nothing rewritten
-    files_mid = {f.path for f in t._replay()[0]}
+    files_mid = {f.path for f in t.snapshot().files}
     res = t.upsert(spark.createDataFrame([("zz", 99)], schema), ["k"])
     assert res["numUpdatedRows"] == 0 and res["numInsertedRows"] == 1
-    assert files_mid <= {f.path for f in t._replay()[0]}
+    assert files_mid <= {f.path for f in t.snapshot().files}
     assert {tuple(r) for r in t.read().collect()} == {
         ("a", 1), ("b", 20), ("x", 3), ("y", 4), ("zz", 99),
     }
@@ -820,7 +820,7 @@ def test_merge_legacy_entries_without_stats_stay_candidates(spark, tmp_path):
         with open(p, "w") as fh:
             _json.dump(d, fh)
     t._commits = None
-    assert all(f.stats is None for f in t._replay()[0])
+    assert all(f.stats is None for f in t.snapshot().files)
     res = t.upsert(spark.createDataFrame([(2, "B2")], schema), ["id"])
     assert res["numUpdatedRows"] == 1
     assert {tuple(r) for r in t.read().collect()} == {(1, "a"), (2, "B2")}
@@ -863,10 +863,10 @@ def test_dml_stats_skipping_excludes_files_without_scan(spark, tmp_path):
                 [(i, f"v{i}") for i in range(lo, lo + 100)], schema
             ).coalesce(1)
         )
-    before = {f.path for f in t._replay()[0]}
+    before = {f.path for f in t.snapshot().files}
     res = t.delete("id >= 150")
     assert res["numDeletedRows"] == 50
-    after = {f.path for f in t._replay()[0]}
+    after = {f.path for f in t.snapshot().files}
     # file [0,99] untouched by the delete
     assert len(before & after) == 1
     res = t.update("id < 50", {"v": "'LOW'"})
@@ -1092,7 +1092,7 @@ def test_read_where_skips_files_by_stats(spark, tmp_path):
     # file-level skipping: only the 200-range append's files reach the
     # scan (each append may produce several files; all 0-/100-range
     # files must be gone)
-    n_active = len(t._replay()[0])
+    n_active = len(t.snapshot().files)
     scanned = {r[0] for r in df.select(F.input_file_name()).distinct().collect()}
     assert len(scanned) <= n_active / 3
     assert {r.id for r in df.collect()} == {200, 201, 202, 203, 204}
@@ -1317,12 +1317,12 @@ def test_incremental_maintenance_scopes_to_touched_partitions(spark, tmp_path):
     # only d2 ingests before the next tick
     for i in range(3):
         t.append(rows_df(spark, [(20 + i, "S", 1.0, "d2")]))
-    d1_files = {f.path for f in t._replay()[0] if "day=d1" in f.path}
+    d1_files = {f.path for f in t.snapshot().files if "day=d1" in f.path}
     r2 = run_maintenance(t, cfg, now_epoch=t0 + 25 * 3600)
     assert r2["scope"] == "day IN ('d2')"
     assert r2["optimize"]["numFilesRemoved"] > 0
     # d1's compacted file survived untouched
-    assert d1_files <= {f.path for f in t._replay()[0]}
+    assert d1_files <= {f.path for f in t.snapshot().files}
 
     # nothing ingests: next tick does no rewrite at all
     r3 = run_maintenance(t, cfg, now_epoch=t0 + 50 * 3600)
@@ -1574,9 +1574,9 @@ def test_generated_column_on_merge_insert_and_update(spark, gen_table):
 
 
 def test_rename_column_metadata_only(spark, table):
-    files_before = {f.path for f in table._replay()[0]}
+    files_before = {f.path for f in table.snapshot().files}
     table.rename_column("amount", "value")
-    assert {f.path for f in table._replay()[0]} == files_before  # no rewrite
+    assert {f.path for f in table.snapshot().files} == files_before  # no rewrite
     got = {(r.id, r.value) for r in table.read().collect()}
     assert got == {(1, 10.0), (2, 20.0), (3, 30.0)}
     assert "amount" not in table.read().columns
@@ -1623,9 +1623,9 @@ def test_rename_column_stats_skipping_still_prunes(spark, tmp_path):
             ).coalesce(1)
         )
     t.rename_column("id", "key")
-    files, *_ = t._replay()
+    files = t.snapshot().files
     assert len(files) == 3
-    conj = t._physical_conjuncts(
+    conj = t.snapshot().physical_conjuncts(
         __import__(
             "databricks_delta_lake_migration_spark.tables.logtable", fromlist=["x"]
         )._parse_conjuncts("key >= 200")
@@ -2049,7 +2049,7 @@ def test_convert_parquet_dir_in_place(spark, tmp_path):
 
     t = LogTable.convert(spark, src)
     # zero copy: the exact same data files, now tracked by the log
-    assert {f.abspath(t.path) for f in t._replay()[0]} == files_before
+    assert {f.abspath(t.path) for f in t.snapshot().files} == files_before
     assert t.partition_columns() == ["day"]
     assert {(r.id, r.status, r.amount, r.day) for r in t.read().collect()} == {
         (1, "A", 1.0, "d1"),
@@ -2306,7 +2306,7 @@ def test_cluster_by_liquid_clustering(spark, tmp_path):
 
     rows = [(i % 64, f"v{i}") for i in range(4096)]
     t.append(spark.createDataFrame(rows, sch).repartition(8))
-    for f in t._replay()[0]:
+    for f in t.snapshot().files:
         ks = pq.read_table(f.abspath(t.path), columns=["k"])["k"].to_pylist()
         assert ks == sorted(ks)
     # a bare OPTIMIZE re-clusters on the declared key (no ZORDER
@@ -2397,12 +2397,21 @@ def test_log_retention_prunes_at_checkpoint_granularity(spark, tmp_path):
             "delta.logRetentionDuration": "interval 0 hours",
         },
     )
+    warm = None
     for i in range(10):
         t.append(spark.createDataFrame([(i,)], "a int"))
+        if i == 7:  # a second handle caches the head before the prune
+            warm = LogTable(spark, str(tmp_path / "lr"))
+            assert warm.read().count() == 8
     # zero retention: the prune at checkpoint 9 cut everything below
     # checkpoint 6 (newest is never the cut)
     versions = sorted(c.version for c in t.commits())
     assert versions[0] == 6 and versions[-1] == 10
+    # the other handle's cached log lost its prefix: its head still
+    # resolves, and time travel below the cut is gone there too
+    assert warm.read().count() == 10
+    with pytest.raises(ValueError, match="not found"):
+        warm.read(version=2)
     # current state is intact (checkpoint + tail replay)
     assert t.read().count() == 10
     assert t.version() == 10
@@ -2658,7 +2667,7 @@ def test_fsck_repair_missing_sidecar_drops_entry(spark, tmp_path):
     t.append(rows_df(spark, [(1, "a", 1.0, "d1"), (2, "b", 2.0, "d1")]))
     t.append(rows_df(spark, [(3, "c", 3.0, "d1")]))
     t.delete("id = 1")  # DV path: tombstone, no rewrite
-    entries = t._replay()[0]
+    entries = t.snapshot().files
     dv_entry = next(f for f in entries if f.dv)
     import shutil
 
@@ -2667,13 +2676,13 @@ def test_fsck_repair_missing_sidecar_drops_entry(spark, tmp_path):
     rep = t.fsck_repair(dry_run=True)
     assert rep["removed"] == [dv_entry.path]
     # dry run changed nothing
-    assert len(t._replay()[0]) == len(entries)
+    assert len(t.snapshot().files) == len(entries)
     rep = t.fsck_repair()
     assert rep["numFilesRemoved"] == 1
     # the dropped file held only the DV-tombstoned row 1, so the
     # visible row set is unchanged — and reads no longer depend on
     # the vanished sidecar
-    assert not any(f.dv for f in t._replay()[0])
+    assert not any(f.dv for f in t.snapshot().files)
     assert {r.id for r in t.read().collect()} == {2, 3}
 
 
@@ -2694,7 +2703,7 @@ def test_fsck_repair_distributed_probe_path(spark, tmp_path):
     t = LogTable.create(spark, str(tmp_path / "t"), SCHEMA)
     for i in range(3):
         t.append(rows_df(spark, [(i, "a", float(i), "d1")]))
-    victim = sorted(f.path for f in t._replay()[0])[1]
+    victim = sorted(f.path for f in t.snapshot().files)[1]
     os.remove(os.path.join(t.path, victim))
     rep = t.fsck_repair(dry_run=True, distribute_threshold=0)
     assert rep["removed"] == [victim]

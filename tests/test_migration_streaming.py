@@ -851,7 +851,7 @@ def test_stream_into_clustered_table(spark, tmp_path):
     assert sorted(r.id for r in t.read().collect()) == [1, 3, 5, 7, 9]
     import pyarrow.parquet as pq
 
-    for f in t._replay()[0]:
+    for f in t.snapshot().files:
         ids = pq.read_table(f.abspath(t.path), columns=["id"])["id"].to_pylist()
         assert ids == sorted(ids)  # cluster-on-write ordered the batch
 

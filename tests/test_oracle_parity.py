@@ -176,3 +176,41 @@ def test_rows_only_runs(spark, name):
     df = q.fn(spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+def test_q18_session_gap_compares_exact_microseconds(spark, tmp_path):
+    """A same-user gap of 1800.31 s exceeds the 30-minute inactivity
+    threshold: both engines must start a second session there (a
+    whole-second comparison truncates the gap to 1800 s and keeps one)."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    ts = [t0, t0 + dt.timedelta(seconds=1800, microseconds=310000)]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "user_id": pa.array([7, 7], pa.int64()),
+            "event_type": ["view", "view"],
+            "value": [1.0, 2.0],
+            "props": ["{}", "{}"],
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    q = all_queries()["q18_sessionization"]
+    sdf = q.fn(spark, str(tmp_path))
+    s_rows = sorted(tuple(r) for r in sdf.select(
+        "user_id", "session_seq", "n_events", "duration_sec"
+    ).collect())
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'events.parquet'}')"
+    )
+    d_rows = sorted(con.execute(
+        f"SELECT user_id, session_seq, n_events, duration_sec FROM ({q.oracle})"
+    ).fetchall())
+    assert s_rows == d_rows == [(7, 1, 1, 0), (7, 2, 1, 0)]

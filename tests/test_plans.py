@@ -207,6 +207,7 @@ def test_identity_assignment_broadcasts_offsets_no_sort_merge(spark, tmp_path):
         identity_columns={"uid": {}},
     )
     df, _ = t._apply_identity(
+        t.snapshot(),
         spark.range(1000).select(F.col("id").alias("v")).repartition(4)
     )
     plan = explain(df)

@@ -176,10 +176,10 @@ def test_optimize_where_partition_scope(spark, cat):
     for i in range(3):  # d1 debris; d2 single file
         t.append(spark.createDataFrame([(i, "d1")], "id long, day string"))
     t.append(spark.createDataFrame([(9, "d2")], "id long, day string"))
-    d2 = {f.path for f in t._replay()[0] if "day=d2" in f.path}
+    d2 = {f.path for f in t.snapshot().files if "day=d2" in f.path}
     r = cat.sql("OPTIMIZE acid.ev WHERE day = 'd1'")
     assert int(r.first()["numFilesRemoved"]) >= 2
-    assert d2 <= {f.path for f in t._replay()[0]}  # d2 untouched
+    assert d2 <= {f.path for f in t.snapshot().files}  # d2 untouched
     r = cat.sql("OPTIMIZE acid.ev WHERE day = 'd1' ZORDER BY (id)")
     assert cat.read("acid.ev").count() == 4
     with pytest.raises(ValueError, match="partition-column"):
@@ -331,7 +331,7 @@ def test_clone_sql_shallow_deep_and_version(spark, cat):
         f.startswith(os.path.realpath(p))
         for f in (
             os.path.realpath(e.abspath(p))
-            for e in cat.table("acid.orders_copy")._replay()[0]
+            for e in cat.table("acid.orders_copy").snapshot().files
         )
     )
     # existing name errors; IF NOT EXISTS no-ops
@@ -646,7 +646,7 @@ def test_fsck_repair_sql(spark, cat):
     import os
 
     t = cat.table("lake.acid.orders")
-    victim = sorted(f.path for f in t._replay()[0])[0]
+    victim = sorted(f.path for f in t.snapshot().files)[0]
     os.remove(os.path.join(t.path, victim))
     dry = cat.sql("FSCK REPAIR TABLE lake.acid.orders DRY RUN").collect()[0]
     assert (dry.numFilesRemoved, dry.dryRun) == ("1", "True")
@@ -666,7 +666,7 @@ def test_generate_manifest_sql(spark, cat):
     t = cat.table("lake.acid.orders")
     man = os.path.join(t.path, "_symlink_format_manifest", "manifest")
     listed = sorted(open(man).read().splitlines())
-    assert listed == sorted(f.abspath(t.path) for f in t._replay()[0])
+    assert listed == sorted(f.abspath(t.path) for f in t.snapshot().files)
 
 
 def test_informational_pk_fk_constraints(spark, cat):
