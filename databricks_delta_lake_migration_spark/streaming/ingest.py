@@ -1313,10 +1313,6 @@ def stream_pit_enrich(
     dkeys = dim_key_columns or key_columns
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
-        from ..tables.logtable import Commit
-
         dim = LogTable(spark, dim_path).read().drop("record_hash")
         attr_cols = [
             c for c in dim.columns
@@ -1346,21 +1342,7 @@ def stream_pit_enrich(
             tbl = LogTable.create(spark, table_path, enriched.schema)
         if batch_id <= _last_committed_batch(tbl, stream_id):
             return
-        snap = tbl.snapshot()
-        aligned = enriched.select(
-            *[F.col(f.name).cast(f.dataType) for f in snap.schema.fields]
-        )
-        entries = tbl._write_files(snap, aligned)
-        tbl._commit(
-            Commit(
-                version=tbl._next_version(),
-                timestamp=_time.time(),
-                operation="STREAMING UPDATE",
-                add=entries,
-                parameters={"streamId": stream_id, "batchId": int(batch_id)},
-                metrics={"numOutputRows": sum(e.num_records for e in entries)},
-            )
-        )
+        _append_batch(tbl, enriched, stream_id, batch_id)
 
     reader = (
         spark.readStream.schema(schema)

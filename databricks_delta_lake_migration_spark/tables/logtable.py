@@ -45,7 +45,7 @@ from dataclasses import dataclass, field, replace as _dc_replace
 from functools import reduce
 from typing import Any, Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -185,6 +185,18 @@ CT_INSERT = "insert"
 CT_UPDATE_PRE = "update_preimage"
 CT_UPDATE_POST = "update_postimage"
 CT_DELETE = "delete"
+
+# DML rewrite frames (UPDATE / DELETE / MERGE → LogTable._rewrite) tag
+# every row with one action in ACTION_COL: "u" updated, "d" deleted,
+# "k" kept (unchanged, or matched with no clause firing), "t" a target
+# row no MERGE source row matched, "i" inserted. PRE_COL is the struct
+# of a row's values before the DML — the CDF update pre-image.
+ACTION_COL = "__action"
+PRE_COL = "__pre"
+
+
+def _count_if(cond: Column) -> Column:
+    return F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0))
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -2212,22 +2224,49 @@ class LogTable:
         )
         return t
 
-    @staticmethod
-    def _check_constraints(snap: Snapshot, df: DataFrame) -> None:
-        """CHECK constraints (Q6 — README.md:303-306): properties of the
-        form ``constraint.<name> = <sql predicate>``, plus generated-
-        column contracts."""
+    def _observed_write(
+        self,
+        snap: Snapshot,
+        rows: DataFrame,
+        counters: dict[str, Column] | None = None,
+        guard: Callable[[dict], Exception | None] | None = None,
+    ) -> tuple[list[FileEntry], dict]:
+        """Write ``rows`` and count ``counters`` plus every CHECK of
+        ``snap`` (``constraint.<name>`` predicates, generated-column and
+        NOT NULL contracts — Q6, README.md:303-306) in ONE Observation
+        on that same write job, so write-time checks cost no job of
+        their own. When ``rows`` carries ``ACTION_COL``, ``d`` rows are
+        counted but neither checked nor written. After the write,
+        ``guard`` (counts → error or None) runs, then the CHECK counts
+        (a NULL predicate passes, as in SQL); either failure deletes
+        the just-written files — nothing references them yet — and
+        raises."""
         checks = snap.checks
-        if not checks:
-            return
-        aggs = [
-            F.sum(F.when(~F.expr(pred), 1).otherwise(0)).alias(name)
-            for name, pred in checks.items()
-        ]
-        row = df.agg(*aggs).collect()[0]
-        bad = {name: row[name] for name in checks if (row[name] or 0) > 0}
-        if bad:
-            raise ConstraintViolationError(f"CHECK constraint violations: {bad}")
+        tagged = ACTION_COL in rows.columns
+        live = F.col(ACTION_COL) != "d" if tagged else F.lit(True)
+        counters = {
+            **(counters or {}),
+            **{
+                f"__check_{name}": _count_if(live & ~F.expr(pred))
+                for name, pred in checks.items()
+            },
+        }
+        obs = Observation()
+        if counters:
+            rows = rows.observe(obs, *[c.alias(n) for n, c in counters.items()])
+        if tagged:
+            rows = rows.filter(live).drop(ACTION_COL)
+        entries = self._write_files(snap, rows)
+        m = obs.get if counters else {}
+        err = guard(m) if guard else None
+        bad = {n: m[f"__check_{n}"] for n in checks if m[f"__check_{n}"]}
+        if err is None and bad:
+            err = ConstraintViolationError(f"CHECK constraint violations: {bad}")
+        if err is not None:
+            for e in entries:
+                self.fs.delete(os.path.join(self.path, e.path))
+            raise err
+        return entries, m
 
     def _write_files(self, snap: Snapshot, df: DataFrame) -> list[FileEntry]:
         """Materialize ``df`` as parquet under the table root, laid out
@@ -2285,12 +2324,19 @@ class LogTable:
         return entries
 
     def _write_changes(
-        self, snap: Snapshot, version: int, change_df: DataFrame | None
+        self, snap: Snapshot, version: int, changes: Callable[[], DataFrame]
     ) -> None:
-        if change_df is None:
-            return
+        """Persist ``version``'s Change Data Feed rows. ``changes()``
+        builds them (data columns + ``_change_type``) and is called only
+        when the table has CDF on — the one place that decides, so a
+        non-CDF write never constructs a change frame."""
         if snap.props.get(CDF_PROP, "false") != "true":
             return
+        change_df = (
+            changes()
+            .withColumn("_commit_version", F.lit(version).cast("long"))
+            .withColumn("_commit_timestamp", F.timestamp_seconds(F.lit(time.time())))
+        )
         mapping = snap.column_mapping
         if mapping:
             # CDF files use physical names too, so pre-rename change
@@ -2349,37 +2395,59 @@ class LogTable:
     def append(self, df: DataFrame, merge_schema: bool = False) -> None:
         """Delta append (K1), optional mergeSchema evolution
         (delta_utils.py:107-147)."""
-        snap = self.snapshot()
+        self._append_rows(
+            self.snapshot(),
+            df,
+            "WRITE",
+            {"mode": "Append", "mergeSchema": merge_schema},
+            merge_schema=merge_schema,
+        )
+
+    def _append_rows(
+        self,
+        snap: Snapshot,
+        df: DataFrame,
+        operation: str,
+        parameters: dict,
+        metrics: dict | None = None,
+        merge_schema: bool = False,
+    ) -> int:
+        """The one ingest path of ``append`` and ``copy_into``: identity
+        and generated columns, alignment with column DEFAULTs,
+        optimizeWrite, one observed write (CHECKs counted inside it),
+        the commit, CDF inserts and autoCompact. Returns the row
+        count written."""
         df, ident_props = self._apply_identity(snap, df)
         df = self._apply_generated(snap, df)
         schema = self._evolve_schema(snap, df, merge_schema)
         data = self._align(df, schema, defaults=snap.column_defaults)
-        self._check_constraints(snap, data)
-        data = self._maybe_optimize_write(snap, data)
-        entries = self._write_files(snap, data)
+        entries, _ = self._observed_write(snap, self._maybe_optimize_write(snap, data))
+        n_rows = sum(e.num_records for e in entries)
         version = self._commit_tx(
             Commit(
                 version=snap.version + 1,
                 timestamp=time.time(),
-                operation="WRITE",
+                operation=operation,
                 add=entries,
                 schema_json=schema.json() if merge_schema else None,
                 properties=ident_props or None,
-                parameters={"mode": "Append", "mergeSchema": merge_schema},
+                parameters=parameters,
                 metrics={
-                    "numOutputRows": sum(e.num_records for e in entries),
+                    "numOutputRows": n_rows,
                     "numAddedFiles": len(entries),
+                    **(metrics or {}),
                 },
             )
         )
         self._write_changes(
             snap,
             version,
-            self._cdf_frame(
-                self._read_entries(snap, entries, schema), CT_INSERT, version
+            lambda: self._read_entries(snap, entries, schema).withColumn(
+                "_change_type", F.lit(CT_INSERT)
             ),
         )
         self._maybe_autocompact(entries)
+        return n_rows
 
     @staticmethod
     def _maybe_optimize_write(snap: Snapshot, data: DataFrame) -> DataFrame:
@@ -2503,42 +2571,23 @@ class LogTable:
                 new.append(ident)
         if not new:
             return {"numLoadedFiles": 0, "numCopiedRows": 0}
-        schema = snap.schema
-        reader = self.spark.read.schema(schema).options(**(options or {}))
+        reader = self.spark.read.schema(snap.schema).options(**(options or {}))
         if file_format == "csv":
             reader = reader.option("header", options.get("header", "true") if options else "true")
         # basePath keeps hive-partition columns resolvable when loading
         # a subset of a partitioned directory
         reader = reader.option("basePath", source_path).format(file_format)
-        df = reader.load([os.path.join(source_path, rel) for rel, _, _ in new])
-        df, ident_props = self._apply_identity(snap, df)
-        df = self._apply_generated(snap, df)
-        data = self._align(df, schema, defaults=snap.column_defaults)
-        self._check_constraints(snap, data)
-        data = self._maybe_optimize_write(snap, data)
-        entries = self._write_files(snap, data)
-        n_rows = sum(e.num_records for e in entries)
-        version = self._commit_tx(
-            Commit(
-                version=snap.version + 1,
-                timestamp=time.time(),
-                operation="COPY INTO",
-                add=entries,
-                properties=ident_props or None,
-                parameters={
-                    "source": source_path,
-                    "fileFormat": file_format,
-                    "sourceFiles": [list(x) for x in sorted(new)],
-                },
-                metrics={"numLoadedFiles": len(new), "numCopiedRows": n_rows},
-            )
-        )
-        self._write_changes(
+        n_rows = self._append_rows(
             snap,
-            version,
-            self._cdf_frame(self._read_entries(snap, entries), CT_INSERT, version),
+            reader.load([os.path.join(source_path, rel) for rel, _, _ in new]),
+            "COPY INTO",
+            {
+                "source": source_path,
+                "fileFormat": file_format,
+                "sourceFiles": [list(x) for x in sorted(new)],
+            },
+            metrics={"numLoadedFiles": len(new)},
         )
-        self._maybe_autocompact(entries)
         return {"numLoadedFiles": len(new), "numCopiedRows": n_rows}
 
     def overwrite(
@@ -2554,81 +2603,66 @@ class LogTable:
         ``dynamic=True`` = Spark's ``partitionOverwriteMode=dynamic``:
         replace exactly the partitions present in ``df``, keep the
         rest. Unlike ``replace_where`` there is no predicate to declare
-        — the incoming data itself names the partitions. One
-        metadata-sized distinct over the partition columns; file
-        selection is pure path matching (no data read)."""
+        — the incoming data itself names the partitions: the ones its
+        written files landed in. File selection is pure path matching
+        (no extra job, no data read)."""
         snap = self.snapshot()
         files, partition_by = snap.files, snap.partition_by
+        if dynamic and not partition_by:
+            raise ValueError("dynamic overwrite requires a partitioned table")
+        if dynamic and replace_where is not None:
+            raise ValueError("dynamic and replace_where are mutually exclusive")
         df, ident_props = self._apply_identity(snap, df)
         df = self._apply_generated(snap, df)
         schema = df.schema if overwrite_schema else snap.schema
-        data = self._align(df, schema, defaults=snap.column_defaults)
-        self._check_constraints(snap, data)
-        data = self._maybe_optimize_write(snap, data)
-
-        removed: list[str]
-        carried: list[FileEntry] = []
-        extra_add: list[FileEntry] = []
-        if dynamic:
-            if not partition_by:
-                raise ValueError("dynamic overwrite requires a partitioned table")
-            if replace_where is not None:
-                raise ValueError("dynamic and replace_where are mutually exclusive")
-            # canonicalize row values to the decoded-path representation
-            # (_partition_values): None stays None (hive NULL dir), bools
-            # write as lowercase, everything else as its str() form —
-            # raw str() produced 'None'/'True' which never matched a
-            # path segment, so those partitions silently duplicated.
-            def canon(v):
-                if v is None:
-                    return None
-                if isinstance(v, bool):
-                    return "true" if v else "false"
-                return str(v)
-
-            new_parts = {
-                tuple(canon(r[c]) for c in partition_by)
-                for r in data.select(*partition_by).distinct().collect()
-            }
-            # paths carry physical names
-            mapping = snap.column_mapping
-            phys_parts = [mapping.get(c, c) for c in partition_by]
-            touched_d, carried = [], []
-            for f in files:
-                pv = _partition_values(f.path)
-                key = tuple(pv.get(c) for c in phys_parts)
-                (touched_d if key in new_parts else carried).append(f)
-            removed = [f.path for f in touched_d]
-        elif replace_where is None:
-            removed = [f.path for f in files]
-        else:
+        rows = self._align(df, schema, defaults=snap.column_defaults)
+        counters: dict[str, Column] = {}
+        guard = None
+        removed = [f.path for f in files]
+        if replace_where is not None:
             pred = F.expr(replace_where)
-            # new data must satisfy the predicate (delta semantics)
-            n_bad = data.filter(~pred).count()
-            if n_bad:
-                raise ValueError(
-                    f"replaceWhere: {n_bad} input rows violate '{replace_where}'"
-                )
-            touched, untouched = self._split_files_by_predicate(
-                snap, pred, replace_where
-            )
+            touched, _ = self._split_files_by_predicate(snap, pred, replace_where)
             removed = [f.path for f in touched]
-            carried = untouched
-            # rows in touched files that do NOT match the predicate survive
+            # new data must satisfy the predicate (delta semantics),
+            # counted inside the write job
+            rows = rows.withColumn(ACTION_COL, F.lit("i"))
+            counters["rw_bad"] = _count_if((F.col(ACTION_COL) == "i") & ~pred)
+
+            def guard(m: dict) -> Exception | None:
+                if not m["rw_bad"]:
+                    return None
+                return ValueError(
+                    f"replaceWhere: {m['rw_bad']} input rows violate '{replace_where}'"
+                )
+
             if touched:
+                # rows in touched files that do NOT match the predicate
+                # survive, rewritten beside the new data
                 rt_on = snap.props.get(RT_PROP) == "true"
                 survivors = self._read_entries(
                     snap, touched, with_row_tracking=rt_on
                 ).filter(~pred)
-                extra_add = self._write_files(
-                    snap,
+                rows = rows.unionByName(
                     self._align(
-                        survivors,
-                        schema,
-                        keep=(ROW_ID_COL, ROW_COMMIT_COL),
-                    ),
+                        survivors, schema, keep=(ROW_ID_COL, ROW_COMMIT_COL)
+                    ).withColumn(ACTION_COL, F.lit("k")),
+                    allowMissingColumns=True,
                 )
-        entries = self._write_files(snap, data) + extra_add
+        entries, _ = self._observed_write(
+            snap, self._maybe_optimize_write(snap, rows), counters, guard
+        )
+        if dynamic:
+            # decoded path values on both sides (physical names), so a
+            # NULL / bool / escaped partition value matches its own dir
+            mapping = snap.column_mapping
+            phys = [mapping.get(c, c) for c in partition_by]
+
+            def part_key(f: FileEntry) -> tuple:
+                pv = _partition_values(f.path)
+                return tuple(pv.get(c) for c in phys)
+
+            new_parts = {part_key(e) for e in entries}
+            removed = [f.path for f in files if part_key(f) in new_parts]
         self._commit_tx(
             Commit(
                 version=snap.version + 1,
@@ -2651,7 +2685,6 @@ class LogTable:
                 },
             )
         )
-        del carried  # carried files stay active simply by not being removed
 
     def _read_entries(
         self,
@@ -2880,20 +2913,11 @@ class LogTable:
     # DML: UPDATE / DELETE / MERGE
     # ------------------------------------------------------------------
 
-    def _cdf_frame(
-        self, df: DataFrame, change_type: str | Column, version: int
-    ) -> DataFrame:
-        ct = F.lit(change_type) if isinstance(change_type, str) else change_type
-        ts = F.timestamp_seconds(F.lit(time.time()))
-        return df.withColumn("_change_type", ct).withColumn(
-            "_commit_version", F.lit(version).cast("long")
-        ).withColumn("_commit_timestamp", ts)
-
     def update(self, condition: str, set_exprs: dict[str, str]) -> dict:
         """UPDATE with predicate (D3 — 04_acid_operations.py:128-139).
         ``set_exprs`` maps column → SQL expression. Generated columns
-        not explicitly assigned are recomputed on the updated rows in a
-        second pass — AFTER the user's assignments land, so the
+        not explicitly assigned are recomputed on the updated rows by
+        ``_rewrite`` — AFTER the user's assignments land, so the
         expression sees the new base values (Delta's UPDATE semantics —
         base-column edits can't leave a generated column stale)."""
         snap = self.snapshot()
@@ -2903,123 +2927,155 @@ class LogTable:
                 f"identity columns {bad_ids} are GENERATED ALWAYS — UPDATE "
                 "cannot assign them"
             )
-        gen_recompute = {
-            c: e for c, e in snap.generated_columns.items() if c not in set_exprs
-        }
         pred = F.expr(condition)
         touched, _ = self._split_files_by_predicate(snap, pred, condition)
-        if not touched:
-            self._commit_dml(snap, "UPDATE", [], [], {"predicate": condition}, 0)
-            return {"numUpdatedRows": 0}
-        schema = snap.schema
-        rt_on = snap.props.get(RT_PROP) == "true"
-        old = self._read_entries(snap, touched, with_row_tracking=rt_on)
-        # one pass: count matched rows via Observation during the write
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        updated = old.withColumn("__hit", pred).observe(
-            obs, F.coalesce(F.sum(F.when(F.col("__hit"), 1).otherwise(0)), F.lit(0)).alias("n")
-        ).withColumns(
-            {
-                c: F.when(F.col("__hit"), F.expr(e)).otherwise(F.col(c))
-                for c, e in set_exprs.items()
-            }
-        ).withColumns(
-            {
-                c: F.when(F.col("__hit"), F.expr(e)).otherwise(F.col(c))
-                for c, e in gen_recompute.items()
-            }
-        )
-        if rt_on:
-            # updated rows: keep the stable row id, reset the commit
-            # version (NULL → the new file's default = this UPDATE);
-            # carried rows keep their materialized version
-            updated = updated.withColumn(
-                ROW_COMMIT_COL,
-                F.when(F.col("__hit"), F.lit(None).cast("long")).otherwise(
-                    F.col(ROW_COMMIT_COL)
-                ),
+        rows = None
+        if touched:
+            old = self._read_entries(
+                snap, touched, with_row_tracking=snap.props.get(RT_PROP) == "true"
             )
-        updated = updated.drop("__hit")
-        self._check_constraints(snap, updated)
-        entries = self._write_files(
-            snap, self._align(updated, schema, keep=(ROW_ID_COL, ROW_COMMIT_COL))
-        )
-        n_updated = obs.get["n"]
-        version = self._commit_dml(
-            snap,
-            "UPDATE",
-            entries,
-            [f.path for f in touched],
-            {"predicate": condition},
-            n_updated,
-        )
-        if snap.props.get(CDF_PROP) == "true":
-            # filter BEFORE applying set-exprs: the update may rewrite
-            # the very columns the predicate tests.
-            matched_old = old.drop(ROW_ID_COL, ROW_COMMIT_COL).filter(pred)
-            pre = self._cdf_frame(matched_old, CT_UPDATE_PRE, version)
-            post = self._cdf_frame(
-                matched_old.withColumns(
-                    {c: F.expr(e) for c, e in set_exprs.items()}
-                ).withColumns({c: F.expr(e) for c, e in gen_recompute.items()}),
-                CT_UPDATE_POST,
-                version,
+            hit = F.col(ACTION_COL) == "u"
+            rows = old.withColumns(
+                {
+                    ACTION_COL: F.when(pred, F.lit("u")).otherwise(F.lit("k")),
+                    PRE_COL: F.struct(*[F.col(c) for c in snap.schema.fieldNames()]),
+                }
+            ).withColumns(
+                {
+                    c: F.when(hit, F.expr(e)).otherwise(F.col(c))
+                    for c, e in set_exprs.items()
+                }
             )
-            self._write_changes(snap, version, pre.unionByName(post))
-        return {"numUpdatedRows": n_updated}
+        m = self._rewrite(
+            snap, "UPDATE", rows, touched, {"predicate": condition}, set(set_exprs)
+        )
+        return {"numUpdatedRows": m["u"]}
 
     def delete(self, condition: str) -> dict:
         """DELETE with predicate (D4 — 04_acid_operations.py:170-175)."""
         snap = self.snapshot()
         pred = F.expr(condition)
         touched, _ = self._split_files_by_predicate(snap, pred, condition)
-        if not touched:
-            self._commit_dml(snap, "DELETE", [], [], {"predicate": condition}, 0)
-            return {"numDeletedRows": 0}
-        if snap.props.get(DV_PROP) == "true":
+        if touched and snap.props.get(DV_PROP) == "true":
             return self._delete_with_dvs(snap, condition, pred, touched)
-        rt_on = snap.props.get(RT_PROP) == "true"
-        old = self._read_entries(snap, touched, with_row_tracking=rt_on)
-        # one pass: deleted rows are counted by the observe node, then
-        # filtered out before the sink.
-        from pyspark.sql import Observation
+        rows = None
+        if touched:
+            rows = self._read_entries(
+                snap, touched, with_row_tracking=snap.props.get(RT_PROP) == "true"
+            ).withColumn(ACTION_COL, F.when(pred, F.lit("d")).otherwise(F.lit("k")))
+        m = self._rewrite(snap, "DELETE", rows, touched, {"predicate": condition})
+        return {"numDeletedRows": m["d"]}
 
-        obs = Observation()
-        survivors = (
-            old.withColumn("__del", pred)
-            .observe(
-                obs,
-                F.coalesce(F.sum(F.when(F.col("__del"), 1).otherwise(0)), F.lit(0)).alias("n"),
+    def _rewrite(
+        self,
+        snap: Snapshot,
+        op: str,
+        rows: DataFrame | None,
+        touched: list[FileEntry],
+        params: dict,
+        assigned: frozenset[str] | set[str] = frozenset(),
+        schema: T.StructType | None = None,
+        expect_target_rows: int | None = None,
+        schema_json: str | None = None,
+        properties: dict[str, str] | None = None,
+    ) -> dict[str, int]:
+        """The one rewrite behind UPDATE, DELETE and MERGE (Delta's
+        "find touched files, rewrite them"). ``rows`` is the new content
+        of the ``touched`` files plus any inserts, each row tagged in
+        ``ACTION_COL``, optionally carrying its pre-DML values in
+        ``PRE_COL`` (update rows) and the row-tracking columns; None
+        means nothing to rewrite (an empty commit). From there, once:
+
+        - generated columns the DML did not assign are recomputed on
+          ``u`` rows, which also reset their row commit version;
+        - ONE write job counts the actions and every CHECK, drops
+          ``d`` rows, and raises (deleting its files) on a violation
+          or — ``expect_target_rows`` set — when target rows came out
+          more than the touched files hold (MERGE's post-hoc
+          multiple-match check);
+        - the commit, then CDF from the same tagged frame: ``u`` →
+          pre/post images, ``d`` → delete, ``i`` → insert.
+
+        Returns the ``u``/``d``/``i`` counts."""
+        if rows is None:
+            self._commit_dml(
+                snap, op, [], [], params, 0, schema_json=schema_json,
+                properties=properties,
             )
-            .filter(~F.col("__del") | F.col("__del").isNull())
-            .drop("__del")
+            return {"u": 0, "d": 0, "i": 0}
+        schema = schema or snap.schema
+        rows = self._align(
+            rows, schema, keep=(ROW_ID_COL, ROW_COMMIT_COL, ACTION_COL, PRE_COL)
         )
-        entries = self._write_files(
-            snap,
-            self._align(survivors, snap.schema, keep=(ROW_ID_COL, ROW_COMMIT_COL)),
+        is_u = F.col(ACTION_COL) == "u"
+        rows = rows.withColumns(
+            {
+                c: F.when(is_u, F.expr(e).cast(schema[c].dataType)).otherwise(
+                    F.col(c)
+                )
+                for c, e in snap.generated_columns.items()
+                if c not in assigned
+            }
         )
-        n_deleted = obs.get["n"]
+        if ROW_COMMIT_COL in rows.columns:
+            # updated rows pick up this commit's version (NULL → the new
+            # file's default); carried rows keep their materialized one
+            rows = rows.withColumn(
+                ROW_COMMIT_COL,
+                F.when(is_u, F.lit(None).cast("long")).otherwise(F.col(ROW_COMMIT_COL)),
+            )
+        counters = {a: _count_if(F.col(ACTION_COL) == a) for a in "udi"}
+        guard = None
+        if expect_target_rows is not None:
+            counters["tgt_rows"] = _count_if(F.col(ACTION_COL).isin("u", "d", "k", "t"))
+
+            def guard(m: dict) -> Exception | None:
+                if m["tgt_rows"] == expect_target_rows:
+                    return None
+                return ValueError(
+                    "MERGE: multiple source rows matched the same target row"
+                )
+
+        entries, m = self._observed_write(
+            snap, rows.drop(PRE_COL), counters, guard
+        )
         version = self._commit_dml(
             snap,
-            "DELETE",
+            op,
             entries,
             [f.path for f in touched],
-            {"predicate": condition},
-            n_deleted,
+            params,
+            m["u"] + m["d"] + m["i"],
+            schema_json=schema_json,
+            properties=properties,
         )
-        if snap.props.get(CDF_PROP) == "true":
-            self._write_changes(
-                snap,
-                version,
-                self._cdf_frame(
-                    old.drop(ROW_ID_COL, ROW_COMMIT_COL).filter(pred),
-                    CT_DELETE,
-                    version,
-                ),
+
+        def changes() -> DataFrame:
+            def image(prefix: str, change_type: Column) -> Column:
+                return F.struct(
+                    *[F.col(prefix + c).alias(c) for c in schema.fieldNames()],
+                    change_type.alias("_change_type"),
+                )
+
+            act = F.col(ACTION_COL)
+            post = image(
+                "",
+                F.when(act == "u", F.lit(CT_UPDATE_POST))
+                .when(act == "d", F.lit(CT_DELETE))
+                .otherwise(F.lit(CT_INSERT)),
             )
-        return {"numDeletedRows": n_deleted}
+            images = F.array(post)
+            if PRE_COL in rows.columns:
+                pre = image(PRE_COL + ".", F.lit(CT_UPDATE_PRE))
+                images = F.when(act == "u", F.array(pre, post)).otherwise(images)
+            return (
+                rows.filter(act.isin("u", "d", "i"))
+                .select(F.explode(images).alias("__change"))
+                .select("__change.*")
+            )
+
+        self._write_changes(snap, version, changes)
+        return {a: m[a] for a in "udi"}
 
     def _delete_with_dvs(
         self, snap: Snapshot, condition: str, pred: Column, touched: list[FileEntry]
@@ -3076,14 +3132,13 @@ class LogTable:
                 },
             )
         )
-        if snap.props.get(CDF_PROP) == "true":
-            self._write_changes(
-                snap,
-                version,
-                self._cdf_frame(
-                    hits.drop("__dv_key", "__dv_ridx"), CT_DELETE, version
-                ),
-            )
+        self._write_changes(
+            snap,
+            version,
+            lambda: hits.drop("__dv_key", "__dv_ridx").withColumn(
+                "_change_type", F.lit(CT_DELETE)
+            ),
+        )
         return {"numDeletedRows": n_deleted}
 
     def _commit_dml(
@@ -3793,56 +3848,49 @@ class MergeBuilder:
 
     def _prune_candidates(self, snap: Snapshot) -> list[FileEntry]:
         """Data skipping for MERGE (Delta's stats-based file pruning):
-        a file whose [min,max] range for an equi-key column is disjoint
-        from the source's global [min,max] for the paired column cannot
-        contain a matched row — drop it from the rewrite set. One tiny
-        aggregate job over the source computes the bounds; no target
-        data is read. Conservative everywhere: files without stats, or
-        non-comparable types, stay candidates."""
-        files = snap.files
+        the source's global [min, max] of each equi-key column becomes
+        ``>=``/``<=`` conjuncts (``=`` when they coincide) on the paired
+        target column, judged by the read-path skipper
+        (``_stats_may_match``: per-file stats and hive partition
+        values) — a file they exclude cannot hold a matched row. One
+        tiny aggregate job over the source; no target data is read.
+        Pairs whose two sides differ in type beyond numeric width are
+        left out (the join casts; a literal compare would not). An
+        empty or all-NULL source key matches nothing: no candidates."""
+        files = list(snap.files)
         mapping = snap.column_mapping
+        parts = {mapping.get(c, c) for c in snap.partition_by}
+        tgt_types = {f.name: f.dataType for f in snap.schema.fields}
+        src_types = {f.name: f.dataType for f in self.source.schema.fields}
+
+        def same_kind(a: T.DataType, b: T.DataType) -> bool:
+            num = T.NumericType
+            return a == b or (isinstance(a, num) and isinstance(b, num))
+
         pairs = [
             (mapping.get(tc, tc), sc)
             for tc, sc in self._equi_pairs(self.condition)
-            if sc in self.source.columns
+            if sc in src_types
+            and tc in tgt_types
+            and same_kind(tgt_types[tc], src_types[sc])
         ]
-        usable = [
+        pairs = [
             (tc, sc)
             for tc, sc in pairs
-            if any(f.stats and tc in f.stats for f in files)
+            if tc in parts or any(f.stats and tc in f.stats for f in files)
         ]
-        if not usable:
-            return list(files)
-        aggs = []
-        for i, (_, sc) in enumerate(usable):
-            aggs += [F.min(sc).alias(f"lo{i}"), F.max(sc).alias(f"hi{i}")]
-        row = self.source.agg(*aggs).first()
-
-        def _comparable(a, b) -> bool:
-            num = (int, float)
-            return (isinstance(a, num) and isinstance(b, num)) or (
-                isinstance(a, str) and isinstance(b, str)
-            )
-
-        out = []
-        for f in files:
-            keep = True
-            for i, (tc, _) in enumerate(usable):
-                s_lo, s_hi = row[f"lo{i}"], row[f"hi{i}"]
-                if s_lo is None:  # empty/all-null source key: no match possible
-                    keep = False
-                    break
-                if not f.stats or tc not in f.stats:
-                    continue
-                f_lo, f_hi = f.stats[tc][0], f.stats[tc][1]
-                if not (_comparable(f_lo, s_lo) and _comparable(f_hi, s_hi)):
-                    continue
-                if f_hi < s_lo or f_lo > s_hi:
-                    keep = False
-                    break
-            if keep:
-                out.append(f)
-        return out
+        if not pairs:
+            return files
+        row = self.source.agg(
+            *[agg(sc) for _, sc in pairs for agg in (F.min, F.max)]
+        ).first()
+        conj: list[tuple[str, str, Any]] = []
+        for i, (tc, _) in enumerate(pairs):
+            lo, hi = row[2 * i], row[2 * i + 1]
+            if lo is None:
+                return []
+            conj += [(tc, "=", lo)] if lo == hi else [(tc, ">=", lo), (tc, "<=", hi)]
+        return [f for f in files if _stats_may_match(f, conj)]
 
     def when_matched_update_all(self, condition: str | None = None) -> "MergeBuilder":
         self.matched.append(("update", None, condition))
@@ -3924,20 +3972,21 @@ class MergeBuilder:
                     "INSERT cannot assign them (INSERT ALL with the column "
                     "in the source counts as assignment)"
                 )
-        if idents:
-            assigned = [
-                c
-                for c in idents
-                for kind, s, _ in (*self.matched, *self.not_matched_by_source)
-                if (s is not None and c in s)
-                or (kind == "update" and s is None and c in self.source.columns)
-            ]
-            if assigned:
-                raise ValueError(
-                    f"identity columns {sorted(set(assigned))} are GENERATED "
-                    "ALWAYS — MERGE UPDATE cannot assign them (UPDATE SET * "
-                    "with the column in the source counts as assignment)"
-                )
+        # columns some UPDATE clause (matched or not-matched-by-source)
+        # assigns; UPDATE SET * assigns every source column
+        assigned = {
+            c
+            for kind, sets, _ in (*self.matched, *self.not_matched_by_source)
+            if kind == "update"
+            for c in (self.source.columns if sets is None else sets)
+        }
+        bad_upd = sorted(c for c in idents if c in assigned)
+        if bad_upd:
+            raise ValueError(
+                f"identity columns {bad_upd} are GENERATED "
+                "ALWAYS — MERGE UPDATE cannot assign them (UPDATE SET * "
+                "with the column in the source counts as assignment)"
+            )
         files = snap.files
         schema = snap.schema
         rt_on = snap.props.get(RT_PROP) == "true"
@@ -4010,133 +4059,95 @@ class MergeBuilder:
             hit = t._norm_paths({r.fp for r in probe})
             touched = [f for f in candidates if f.path in hit]
 
-        tgt = (
-            t._read_entries(snap, touched, schema, with_row_tracking=rt_on)
-            .withColumn("__tgt", F.lit(1))
-            .alias("target")
-            if touched
-            else None
-        )
+        def _first_firing(clauses: list) -> Column:
+            """Index of the first clause whose condition holds (NULL if none)."""
+            idx = F.lit(None).cast("int")
+            for i, (_, _, c) in reversed(list(enumerate(clauses))):
+                fires = F.lit(True) if c is None else F.expr(c)
+                idx = F.when(fires, F.lit(i)).otherwise(idx)
+            return idx
 
-        out_parts: list[DataFrame] = []
+        def _set_value(c: str, sets: dict[str, str] | None) -> Column:
+            given = self.source.columns if sets is None else sets  # SET *
+            if c not in given:
+                return F.col(f"target.{c}")
+            return F.expr(f"source.{c}" if sets is None else sets[c])
 
-        def _apply_matched(
-            joined: DataFrame,
-        ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-            """rows → (updated rows, deleted pre-images, untouched-matched,
-            pre-images of clause-affected rows)"""
-            # first-clause-wins: tag each row with the clause index that fires
-            clause_idx = F.lit(None).cast("int")
-            for i, (_, _, c) in reversed(list(enumerate(self.matched))):
-                fire = F.lit(True) if c is None else F.expr(c)
-                clause_idx = F.when(fire, F.lit(i)).otherwise(clause_idx)
-            tagged = joined.withColumn("__clause", clause_idx)
-            updated_parts, deleted_parts = [], []
-            for i, (kind, set_exprs, _) in enumerate(self.matched):
-                rows = tagged.filter(F.col("__clause") == i)
-                if kind == "update":
-                    if set_exprs is None:  # UPDATE ALL
-                        proj = [
-                            F.expr(f"source.{c}").alias(c)
-                            if c in self.source.columns
-                            else F.col(f"target.{c}").alias(c)
-                            for c in tcols
-                        ]
-                    else:
-                        proj = [
-                            F.expr(set_exprs[c]).alias(c)
-                            if c in set_exprs
-                            else F.col(f"target.{c}").alias(c)
-                            for c in tcols
-                        ]
-                    updated_parts.append(rows.select(*proj))
-                else:  # delete
-                    deleted_parts.append(
-                        rows.select(*[F.col(f"target.{c}").alias(c) for c in tcols])
-                    )
-            untouched_matched = tagged.filter(F.col("__clause").isNull()).select(
-                *[F.col(f"target.{c}").alias(c) for c in tcols]
+        def _target_rows(j: DataFrame, matched: Column) -> DataFrame:
+            """Touched target rows beside their source match: the first
+            firing WHEN MATCHED clause (matched rows) or WHEN NOT MATCHED
+            BY SOURCE clause (unmatched rows) decides each row's values
+            and action; no clause firing leaves the row as it was."""
+            clause_sets = (
+                ("__clause", self.matched),
+                ("__nmbs", self.not_matched_by_source),
             )
-            # update pre-images selected by the FIRING CLAUSE's kind —
-            # never by anti-joining pre against deletes on all columns,
-            # which NULL equality breaks (a deleted NULL-bearing row
-            # would emit a spurious update_preimage)
-            upd_idx = [
-                i for i, (kind, _, _) in enumerate(self.matched) if kind == "update"
-            ]
-            update_pre = tagged.filter(F.col("__clause").isin(upd_idx)).select(
-                *[F.col(f"target.{c}").alias(c) for c in tcols]
+            j = j.withColumns(
+                {
+                    "__clause": F.when(matched, _first_firing(self.matched)),
+                    "__nmbs": F.when(
+                        ~matched, _first_firing(self.not_matched_by_source)
+                    ),
+                }
             )
-            empty = t.spark.createDataFrame([], schema)
-            upd = reduce(DataFrame.unionByName, updated_parts) if updated_parts else empty
-            dele = reduce(DataFrame.unionByName, deleted_parts) if deleted_parts else empty
-            return upd, dele, untouched_matched, update_pre
-
-        TAG = "__merge_action"
-
-        def _tag(df: DataFrame, tag: str) -> DataFrame:
-            out = t._align(
-                df, schema, keep=(ROW_ID_COL, ROW_COMMIT_COL)
-            ).withColumn(TAG, F.lit(tag))
-            if rt_on:
-                # insert rows carry NULL tracking columns: their id and
-                # commit version default to the new file's brid/rcv —
-                # fresh ids for genuinely new rows, no allocation job
-                for c in (ROW_ID_COL, ROW_COMMIT_COL):
-                    if c not in out.columns:
-                        out = out.withColumn(c, F.lit(None).cast("long"))
-            return out
-
-        def _insert_value(cname: str, values: dict[str, str] | None):
-            if values is None:  # INSERT ALL
-                return (
-                    F.expr(f"source.{cname}")
-                    if cname in self.source.columns
-                    else F.lit(None)
-                )
-            return F.expr(values[cname]) if cname in values else F.lit(None)
+            action = F.when(matched, F.lit("k")).otherwise(F.lit("t"))
+            values = {c: F.col(f"target.{c}") for c in tcols}
+            for idx, clauses in clause_sets:
+                for i, (kind, sets, _) in enumerate(clauses):
+                    fires = F.col(idx) == i
+                    action = F.when(fires, F.lit(kind[0])).otherwise(action)  # u / d
+                    if kind == "update":
+                        values = {
+                            c: F.when(fires, _set_value(c, sets)).otherwise(v)
+                            for c, v in values.items()
+                        }
+            rt = [ROW_ID_COL, ROW_COMMIT_COL] if rt_on else []
+            return j.select(
+                *[values[f.name].cast(f.dataType).alias(f.name) for f in schema.fields],
+                action.alias(ACTION_COL),
+                F.struct(*[F.col(f"target.{c}").alias(c) for c in tcols]).alias(
+                    PRE_COL
+                ),
+                *[F.col(f"target.{c}").alias(c) for c in rt],
+            )
 
         gen_cols = snap.generated_columns
+        ident_props: dict[str, str] = {}
 
-        def _build_insert_parts(unmatched_src: DataFrame) -> list[DataFrame]:
-            """Standalone insert-clause chain over unmatched source rows
-            (used when there is no rewrite join to piggyback on).
-            Generated columns the clause leaves unassigned are computed
-            over the projected (single-sided, unambiguous) insert rows."""
+        def _insert_rows(unmatched_src: DataFrame) -> DataFrame:
+            """Insert-clause chain over unmatched source rows (first
+            clause whose condition holds wins), tagged ``i``. Generated
+            columns a clause leaves unassigned are computed over its
+            projected (single-sided, unambiguous) rows; identity columns
+            are stamped from the watermark (one extra metadata-sized
+            count job; the advanced watermark commits WITH the merge, so
+            concurrent identity writers OCC-conflict instead of
+            double-allocating)."""
             parts, remaining = [], unmatched_src
             for values, c in self.not_matched:
                 rows = remaining.filter(F.expr(c)) if c else remaining
+                given = self.source.columns if values is None else values  # INSERT *
                 part = rows.select(
-                    *[_insert_value(c2, values).alias(c2) for c2 in tcols]
+                    *[
+                        (
+                            F.expr(f"source.{c2}" if values is None else values[c2])
+                            if c2 in given
+                            else F.lit(None)
+                        ).alias(c2)
+                        for c2 in tcols
+                    ]
                 )
                 for gc, ge in gen_cols.items():
-                    unassigned = (
-                        gc not in self.source.columns
-                        if values is None
-                        else gc not in values
-                    )
-                    if unassigned and gc in part.columns:
+                    if gc not in given and gc in part.columns:
                         part = part.withColumn(gc, F.expr(ge))
                 parts.append(part)
                 if c:
                     remaining = remaining.filter(~F.expr(c) | F.expr(c).isNull())
                 else:
                     remaining = remaining.limit(0)
-            return parts
-
-        ident_props: dict[str, str] = {}
-        insert_frames: list[DataFrame] = []
-
-        def _insert_frame(unmatched_src: DataFrame) -> DataFrame | None:
-            """Insert-clause rows, tagged, with identity columns stamped
-            from the watermark (one extra metadata-sized count job over
-            the unmatched slice; the advanced watermark commits WITH the
-            merge, so concurrent identity writers OCC-conflict instead
-            of double-allocating)."""
-            parts = _build_insert_parts(unmatched_src)
-            if not parts:
-                return None
-            ins = _tag(reduce(DataFrame.unionByName, parts), "i")
+            ins = t._align(reduce(DataFrame.unionByName, parts), schema).withColumn(
+                ACTION_COL, F.lit("i")
+            )
             if idents:
                 ins, ip = t._allocate_identity(ins, idents)
                 ident_props.update(ip)
@@ -4147,340 +4158,75 @@ class MergeBuilder:
                 # NULL-offset) values than the committed table data —
                 # localCheckpoint makes both jobs read the same rows
                 ins = ins.localCheckpoint(eager=False)
-            insert_frames.append(ins)
             return ins
 
-        # ---- WHEN NOT MATCHED BY SOURCE helpers (clause selection over
-        # target rows with no source match; conditions/sets are
-        # target.*-only expressions) --------------------------------------
-        def _nmbs_idx() -> Column:
-            idx = F.lit(None).cast("int")
-            for i, (_, _, c) in reversed(list(enumerate(self.not_matched_by_source))):
-                fire = F.lit(True) if c is None else F.expr(c)
-                idx = F.when(fire, F.lit(i)).otherwise(idx)
-            return idx
-
-        def _nmbs_val(cname: str, base: Column) -> Column:
-            expr = base
-            for i, (kind, set_exprs, _) in enumerate(self.not_matched_by_source):
-                if kind != "update":
-                    continue
-                val = (
-                    F.expr(set_exprs[cname])
-                    if cname in set_exprs
-                    else F.col(f"target.{cname}")
-                )
-                expr = F.when(F.col("__nmbs") == i, val).otherwise(expr)
-            return expr
-
-        def _nmbs_kind_tag() -> Column:
-            kt = F.lit("u")
-            for i, (kind, _, _) in enumerate(self.not_matched_by_source):
-                if kind == "delete":
-                    kt = F.when(F.col("__nmbs") == i, "d").otherwise(kt)
-            return kt
-
-        if tgt is not None and self.matched:
-            # Rewrite join: touched files ⟕ source. Left-outer — NOT
-            # full-outer — so the planner stays free to broadcast the
-            # source side (Spark can never broadcast a full-outer join;
-            # it would force a two-sided shuffle sort-merge even for a
-            # tiny update batch against a pruned file set). INSERT rows
-            # come from a separate anti join below: its shuffles hash on
-            # the same keys, so at scale exchange reuse/AQE shares them
-            # with the rewrite join, and at small scale both broadcast.
-            src_marked = self.source.withColumn("__src", F.lit(1)).alias("source")
-            j = tgt.join(src_marked, cond, "left_outer")
-            matched = F.col("source.__src").isNotNull()
-
-            clause_idx = F.lit(None).cast("int")
-            for i, (_, _, c) in reversed(list(enumerate(self.matched))):
-                fire = F.lit(True) if c is None else F.expr(c)
-                clause_idx = F.when(fire, F.lit(i)).otherwise(clause_idx)
-            j = j.withColumn("__clause", F.when(matched, clause_idx))
-            j = j.withColumn(
-                "__nmbs", F.when(F.col("source.__src").isNull(), _nmbs_idx())
-            )
-
-            proj = []
-            for fld in schema.fields:
-                cname = fld.name
-                expr = F.col(f"target.{cname}")
-                for i, (kind, set_exprs, _) in enumerate(self.matched):
-                    if kind != "update":
-                        continue
-                    if set_exprs is None:  # UPDATE ALL
-                        val = (
-                            F.expr(f"source.{cname}")
-                            if cname in self.source.columns
-                            else F.col(f"target.{cname}")
-                        )
-                    else:
-                        val = (
-                            F.expr(set_exprs[cname])
-                            if cname in set_exprs
-                            else F.col(f"target.{cname}")
-                        )
-                    expr = F.when(F.col("__clause") == i, val).otherwise(expr)
-                expr = _nmbs_val(cname, expr)
-                proj.append(expr.cast(fld.dataType).alias(cname))
-
-            kind_tag = F.lit("u")
-            for i, (kind, _, _) in enumerate(self.matched):
-                if kind == "delete":
-                    kind_tag = F.when(F.col("__clause") == i, "d").otherwise(kind_tag)
-            tag = (
-                F.when(F.col("__clause").isNotNull(), kind_tag)
-                .when(F.col("__nmbs").isNotNull(), _nmbs_kind_tag())
-                .when(matched, F.lit("k"))
-                .otherwise(F.lit("t"))
-            )
-            rt_cols = (
-                [
-                    # stable id rides the rewrite; updated rows reset
-                    # their commit version (→ the MERGE's version via
-                    # the new file's rcv), carried rows keep theirs
-                    F.col(f"target.{ROW_ID_COL}").alias(ROW_ID_COL),
-                    F.when(tag == "u", F.lit(None).cast("long"))
-                    .otherwise(F.col(f"target.{ROW_COMMIT_COL}"))
-                    .alias(ROW_COMMIT_COL),
-                ]
-                if rt_on
-                else []
-            )
-            out_parts.append(j.select(*proj, tag.alias(TAG), *rt_cols))
-            if self.not_matched:
-                # a source row unmatched in the touched files is
-                # unmatched in the whole table: pruning only drops files
-                # whose key ranges provably exclude every source key.
-                unmatched_src = src.join(
-                    t._read_entries(snap, touched, schema).alias("target"),
-                    cond,
-                    "left_anti",
-                )
-                ins = _insert_frame(unmatched_src)
-                if ins is not None:
-                    out_parts.append(ins)
-        elif tgt is not None:
-            # NOT-MATCHED-BY-SOURCE without matched clauses: a multi-
-            # match source can't corrupt anything, so no probe — split
-            # target into matched (kept verbatim, semi join) and
-            # unmatched (clauses apply, anti join). Both joins hash on
-            # the same keys → AQE/exchange reuse shares the shuffle.
-            tgt_all = t._read_entries(
+        parts: list[DataFrame] = []
+        scope: list[FileEntry] = []  # files whose rows an insert must not match
+        if touched:
+            tgt = t._read_entries(
                 snap, touched, schema, with_row_tracking=rt_on
             ).alias("target")
-            out_parts.append(_tag(tgt_all.join(src, cond, "left_semi"), "k"))
-            unm = tgt_all.join(src, cond, "left_anti").withColumn(
-                "__nmbs", _nmbs_idx()
-            )
-            proj = [
-                _nmbs_val(fld.name, F.col(f"target.{fld.name}"))
-                .cast(fld.dataType)
-                .alias(fld.name)
-                for fld in schema.fields
-            ]
-            tag = (
-                F.when(F.col("__nmbs").isNotNull(), _nmbs_kind_tag())
-                .otherwise(F.lit("t"))
-            )
-            rt_cols = (
-                [
-                    F.col(f"target.{ROW_ID_COL}").alias(ROW_ID_COL),
-                    F.when(tag == "u", F.lit(None).cast("long"))
-                    .otherwise(F.col(f"target.{ROW_COMMIT_COL}"))
-                    .alias(ROW_COMMIT_COL),
-                ]
-                if rt_on
-                else []
-            )
-            out_parts.append(unm.select(*proj, tag.alias(TAG), *rt_cols))
-            if self.not_matched:
-                unmatched_src = src.join(tgt_all, cond, "left_anti")
-                ins = _insert_frame(unmatched_src)
-                if ins is not None:
-                    out_parts.append(ins)
-        elif self.not_matched:
-            # no rewrite join to piggyback on: unmatched source rows are
-            # ALL source rows when the probe proved no matches (or the
-            # table is empty); insert-only merges against existing files
-            # still need the anti-join.
-            if files and not self.matched:
-                tgt_full = t._read_entries(snap, files, schema).alias("target")
-                unmatched_src = src.join(tgt_full, cond, "left_anti")
+            if self.matched:
+                # Rewrite join: touched files ⟕ source. Left-outer — NOT
+                # full-outer — so the planner stays free to broadcast the
+                # source side (Spark can never broadcast a full-outer
+                # join; it would force a two-sided shuffle sort-merge even
+                # for a tiny update batch against a pruned file set).
+                # INSERT rows come from a separate anti join below: its
+                # shuffles hash on the same keys, so at scale exchange
+                # reuse/AQE shares them with the rewrite join, and at
+                # small scale both broadcast.
+                src_marked = self.source.withColumn("__src", F.lit(1)).alias("source")
+                j = tgt.join(src_marked, cond, "left_outer")
+                parts.append(_target_rows(j, F.col("source.__src").isNotNull()))
             else:
-                unmatched_src = src
-            ins = _insert_frame(unmatched_src)
-            if ins is not None:
-                out_parts.append(ins)
+                # NOT MATCHED BY SOURCE without matched clauses: a multi-
+                # match source can't corrupt anything, so no probe and no
+                # row fan-out — matched rows come from a semi join,
+                # unmatched ones from an anti join. Both hash on the same
+                # keys → AQE/exchange reuse shares the shuffle.
+                j = (
+                    tgt.join(src, cond, "left_semi")
+                    .withColumn("__m", F.lit(True))
+                    .unionByName(
+                        tgt.join(src, cond, "left_anti").withColumn("__m", F.lit(False))
+                    )
+                    .alias("target")
+                )
+                parts.append(_target_rows(j, F.col("__m")))
+            # a source row unmatched in the touched files is unmatched in
+            # the whole table: pruning only drops files whose key ranges
+            # provably exclude every source key
+            scope = touched
+        elif not self.matched:
+            scope = list(files)  # insert-only merge: no probe ran
+        # else: pruning or the probe proved no matches (or the table is
+        # empty), so every source row is unmatched
+        if self.not_matched:
+            unmatched_src = src
+            if scope:
+                scope_df = t._read_entries(snap, scope, schema).alias("target")
+                unmatched_src = src.join(scope_df, cond, "left_anti")
+            parts.append(_insert_rows(unmatched_src))
 
-        if not out_parts:
-            t._commit_dml(
-                snap,
-                "MERGE",
-                [],
-                [],
-                {"predicate": self.condition, **self.extra_params},
-                0,
-                schema_json=evolved_json,
-                properties=self.extra_props or None,
-            )
-            return {"numUpdatedRows": 0, "numDeletedRows": 0, "numInsertedRows": 0}
-
-        # Job 2 — ONE pass: clause metrics, constraint checks, and the
-        # rewrite are all collected by a single write action via
-        # Observation; deleted rows flow through the observe node, then
-        # are filtered out before the sink.
-        from pyspark.sql import Observation
-
-        tagged = reduce(DataFrame.unionByName, out_parts)
-        # Recompute generated columns on update-tagged rows (insert
-        # parts already computed theirs): a MERGE UPDATE that edits base
-        # columns must not leave a generated column stale. A column any
-        # update clause explicitly assigns is honored verbatim — and
-        # then validated by the generated-column check below.
-        def _explicitly_assigned(gc: str) -> bool:
-            for kind, s, _ in self.matched:
-                if kind == "update" and (
-                    (s is None and gc in self.source.columns)
-                    or (s is not None and gc in s)
-                ):
-                    return True
-            for kind, s, _ in self.not_matched_by_source:
-                if kind == "update" and s is not None and gc in s:
-                    return True
-            return False
-
-        field_types = {f.name: f.dataType for f in schema.fields}
-        recompute = {
-            gc: ge for gc, ge in gen_cols.items() if not _explicitly_assigned(gc)
-        }
-        if recompute:
-            tagged = tagged.withColumns(
-                {
-                    gc: F.when(F.col(TAG) == "u", F.expr(ge).cast(field_types[gc]))
-                    .otherwise(F.col(gc))
-                    for gc, ge in recompute.items()
-                }
-            )
-        checks = snap.checks
-        count_if = lambda c: F.coalesce(  # noqa: E731
-            F.sum(F.when(c, 1).otherwise(0)), F.lit(0)
-        )
-        metrics = [
-            count_if(F.col(TAG) == "u").alias("u"),
-            count_if(F.col(TAG) == "d").alias("d"),
-            count_if(F.col(TAG) == "i").alias("i"),
-            count_if(F.col(TAG).isin("u", "d", "k", "t")).alias("tgt_rows"),
-        ] + [
-            count_if((F.col(TAG) != "d") & ~F.expr(pred)).alias(f"__check_{name}")
-            for name, pred in checks.items()
-        ]
-        obs = Observation()
-        result = (
-            tagged.observe(obs, *metrics)
-            .filter(~F.col(TAG).isin("d", "x"))
-            .drop(TAG)
-        )
-        entries = t._write_files(snap, result)
-        m = obs.get
-
-        def _rollback():
-            # uncommitted files — nothing references them yet
-            for e in entries:
-                t.fs.delete(os.path.join(t.path, e.path))
-
-        if skip_probe and m["tgt_rows"] != sum(f.num_records for f in touched):
-            _rollback()
-            raise ValueError(
-                "MERGE: multiple source rows matched the same target row"
-            )
-        bad = {n: m[f"__check_{n}"] for n in checks if m[f"__check_{n}"] > 0}
-        if bad:
-            _rollback()
-            raise ConstraintViolationError(f"CHECK constraint violations: {bad}")
-        n_updated, n_deleted, n_inserted = m["u"], m["d"], m["i"]
-        version = t._commit_dml(
+        m = t._rewrite(
             snap,
             "MERGE",
-            entries,
-            [f.path for f in touched],
+            reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+            ) if parts else None,
+            touched,
             {"predicate": self.condition, **self.extra_params},
-            n_updated + n_deleted + n_inserted,
+            assigned,
+            schema=schema,
+            expect_target_rows=(
+                sum(f.num_records for f in touched) if skip_probe else None
+            ),
             schema_json=evolved_json,
-            properties={**(self.extra_props or {}), **ident_props} or None,
+            properties={**self.extra_props, **ident_props} or None,
         )
-        # CDF: write pre/post images + inserts/deletes
-        if snap.props.get(CDF_PROP) == "true":
-            parts = []
-            if tgt is not None and self.matched:
-                matched_joined = tgt.join(src, cond, "inner")
-                upd, dele, _, update_pre = _apply_matched(matched_joined)
-                parts += [
-                    t._cdf_frame(upd, CT_UPDATE_POST, version),
-                    t._cdf_frame(update_pre, CT_UPDATE_PRE, version),
-                    t._cdf_frame(dele, CT_DELETE, version),
-                ]
-            if self.not_matched_by_source and touched:
-                unm = (
-                    t._read_entries(snap, touched, schema)
-                    .alias("target")
-                    .join(src, cond, "left_anti")
-                    .withColumn("__nmbs", _nmbs_idx())
-                )
-                upd2_parts, del2_parts = [], []
-                for i, (kind, set_exprs, _) in enumerate(self.not_matched_by_source):
-                    rows = unm.filter(F.col("__nmbs") == i)
-                    if kind == "update":
-                        proj2 = [
-                            (
-                                F.expr(set_exprs[c])
-                                if c in set_exprs
-                                else F.col(f"target.{c}")
-                            )
-                            .cast(schema[c].dataType)
-                            .alias(c)
-                            for c in tcols
-                        ]
-                        upd2_parts.append(rows.select(*proj2))
-                    else:
-                        del2_parts.append(
-                            rows.select(*[F.col(f"target.{c}").alias(c) for c in tcols])
-                        )
-                # update pre-images by firing-clause kind (see
-                # _apply_matched: all-column anti-joins break on NULLs)
-                upd_idx2 = [
-                    i
-                    for i, (kind, _, _) in enumerate(self.not_matched_by_source)
-                    if kind == "update"
-                ]
-                pre2 = unm.filter(F.col("__nmbs").isin(upd_idx2)).select(
-                    *[F.col(f"target.{c}").alias(c) for c in tcols]
-                )
-                empty2 = t.spark.createDataFrame([], schema)
-                upd2 = (
-                    reduce(DataFrame.unionByName, upd2_parts) if upd2_parts else empty2
-                )
-                del2 = (
-                    reduce(DataFrame.unionByName, del2_parts) if del2_parts else empty2
-                )
-                parts += [
-                    t._cdf_frame(upd2, CT_UPDATE_POST, version),
-                    t._cdf_frame(pre2, CT_UPDATE_PRE, version),
-                    t._cdf_frame(del2, CT_DELETE, version),
-                ]
-            if self.not_matched and n_inserted and insert_frames:
-                # reuse the stamped insert plan (identity values and all)
-                # instead of rebuilding — a rebuild would re-derive
-                # identity columns as NULL
-                ins_all = reduce(DataFrame.unionByName, insert_frames).drop(TAG)
-                parts.append(
-                    t._cdf_frame(t._align(ins_all, schema), CT_INSERT, version)
-                )
-            if parts:
-                t._write_changes(snap, version, reduce(DataFrame.unionByName, parts))
         return {
-            "numUpdatedRows": n_updated,
-            "numDeletedRows": n_deleted,
-            "numInsertedRows": n_inserted,
+            "numUpdatedRows": m["u"],
+            "numDeletedRows": m["d"],
+            "numInsertedRows": m["i"],
         }

@@ -168,9 +168,13 @@ def test_replace_where_idempotent(spark, table):
 
 
 def test_replace_where_rejects_out_of_scope_rows(spark, table):
-    bad = rows_df(spark, [(100, "GOLD", 1.0, "d2")])
-    with pytest.raises(ValueError, match="violate"):
+    bad = rows_df(spark, [(100, "GOLD", 1.0, "d2"), (101, "GOLD", 1.0, "d1")])
+    before = (table.version(), state(table), data_files(table))
+    with pytest.raises(
+        ValueError, match=r"replaceWhere: 1 input rows violate 'day = 'd1''"
+    ):
         table.overwrite(bad, replace_where="day = 'd1'")
+    assert (table.version(), state(table), data_files(table)) == before
 
 
 def test_cdf_insert_update_delete(spark, table):
@@ -218,17 +222,99 @@ def test_append_schema_mismatch_is_projected(spark, table):
     assert "junk" not in table.read().columns
 
 
+def data_files(t):
+    """Every parquet data file under the table root, referenced or not."""
+    return {
+        os.path.relpath(os.path.join(d, n), t.path)
+        for d, _, names in os.walk(t.path)
+        for n in names
+        if n.endswith(".parquet") and not os.path.relpath(d, t.path).startswith("_")
+    }
+
+
 def test_check_constraints(spark, tmp_path):
+    """A violating append, UPDATE, MERGE or replaceWhere overwrite
+    raises and leaves the version, the rows, the log's file set and the
+    files on disk as they were."""
     t = LogTable.create(
         spark,
         str(tmp_path / "c"),
         SCHEMA,
         properties={"constraint.valid_amount": "amount > 0"},
     )
-    t.append(rows_df(spark, [(1, "OK", 5.0, "d1")]))
-    with pytest.raises(ConstraintViolationError, match="valid_amount"):
-        t.append(rows_df(spark, [(2, "BAD", -1.0, "d1")]))
-    assert t.read().count() == 1
+    t.append(rows_df(spark, [(1, "OK", 5.0, "d1"), (2, "OK", 6.0, "d1")]))
+    violations = {
+        "append": lambda: t.append(rows_df(spark, [(3, "BAD", -1.0, "d1")])),
+        "update": lambda: t.update("id = 1", {"amount": "-amount"}),
+        "merge": lambda: t.upsert(
+            rows_df(spark, [(2, "BAD", -2.0, "d1"), (4, "NEW", 4.0, "d1")]), ["id"]
+        ),
+        "replace_where": lambda: t.overwrite(
+            rows_df(spark, [(1, "BAD", -1.0, "d1")]), replace_where="id = 1"
+        ),
+    }
+    for op, write in violations.items():
+        before = (
+            t.version(), state(t), {f.path for f in t.snapshot().files}, data_files(t)
+        )
+        with pytest.raises(ConstraintViolationError, match="valid_amount"):
+            write()
+        after = (
+            t.version(), state(t), {f.path for f in t.snapshot().files}, data_files(t)
+        )
+        assert after == before, op
+    assert t.read().count() == 2
+
+
+def _jobs(spark, call) -> int:
+    """Spark jobs ``call`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"count-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_check_constraints_cost_no_extra_jobs(spark, tmp_path):
+    """CHECKs are counted inside the write job: append, UPDATE and a
+    replaceWhere overwrite run as many jobs on a CHECKed table as on the
+    same table without one."""
+    counts = {}
+    for name, props in [("plain", {}), ("checked", {"constraint.pos": "amount > 0"})]:
+        t = LogTable.create(spark, str(tmp_path / name), SCHEMA, properties=props)
+        t.append(rows_df(spark, [(i, "OK", float(i + 1), "d1") for i in range(10)]))
+        t.update("id = 0", {"amount": "amount + 1"})  # warm both paths
+        counts[name] = (
+            _jobs(spark, lambda: t.append(rows_df(spark, [(11, "OK", 1.0, "d1")]))),
+            _jobs(spark, lambda: t.update("id = 3", {"amount": "amount + 1"})),
+            _jobs(
+                spark,
+                lambda: t.overwrite(
+                    rows_df(spark, [(5, "OK", 7.0, "d1")]), replace_where="id = 5"
+                ),
+            ),
+        )
+    assert counts["checked"] == counts["plain"], counts
+
+
+def test_check_constraints_empty_append_returns(spark, tmp_path):
+    """An empty batch into a CHECKed table completes its observed write
+    instead of waiting forever for the metrics."""
+    import threading
+
+    t = LogTable.create(
+        spark, str(tmp_path / "e"), SCHEMA, properties={"constraint.pos": "amount > 0"}
+    )
+    worker = threading.Thread(
+        target=lambda: t.append(spark.createDataFrame([], SCHEMA)), daemon=True
+    )
+    worker.start()
+    worker.join(timeout=300)
+    assert not worker.is_alive()
+    assert t.version() == 1 and t.read().count() == 0
 
 
 def test_optimize_compacts_small_files(spark, table):
@@ -824,6 +910,26 @@ def test_merge_legacy_entries_without_stats_stay_candidates(spark, tmp_path):
     res = t.upsert(spark.createDataFrame([(2, "B2")], schema), ["id"])
     assert res["numUpdatedRows"] == 1
     assert {tuple(r) for r in t.read().collect()} == {(1, "a"), (2, "B2")}
+
+
+def test_merge_prunes_files_by_partition_value(spark, tmp_path):
+    """Hive partition columns carry no footer stats: MERGE pruning reads
+    their values from the file paths, so an upsert keyed on the
+    partition rewrites only the one file that can match."""
+    import random
+
+    schema = T.StructType(
+        [T.StructField("p", T.IntegerType()), T.StructField("k", T.LongType())]
+    )
+    rnd = random.Random(7)
+    rows = [(p, rnd.randrange(1000)) for p in range(20) for _ in range(4)]
+    t = LogTable.create(spark, str(tmp_path / "pp"), schema, partition_by=["p"])
+    t.append(spark.createDataFrame(rows, schema).repartition("p"))
+    assert len(t.snapshot().files) == 20
+    t.upsert(spark.createDataFrame([rows[13]], schema), ["p", "k"])
+    m = t.commits()[-1].metrics
+    assert m["numRemovedFiles"] == 1 and m["numAddedFiles"] == 1, m
+    assert sorted(tuple(r) for r in t.read().collect()) == sorted(rows)
 
 
 def test_dml_stats_skipping_excludes_files_without_scan(spark, tmp_path):
@@ -1566,6 +1672,33 @@ def test_generated_column_on_merge_insert_and_update(spark, gen_table):
     )
     # update recomputed bucket from the NEW amount; insert computed it
     assert gen_state(gen_table) == {(1, 31.0, 3), (2, 7.0, 0), (3, 55.0, 5)}
+
+
+def test_merge_cdf_postimages_match_committed_rows(spark, tmp_path):
+    """MERGE's update_postimage rows carry the recomputed generated
+    column — every postimage equals the row the table committed."""
+    t = LogTable.create(
+        spark,
+        str(tmp_path / "gencdf"),
+        GEN_SCHEMA,
+        generated_columns={"bucket": "CAST(amount / 10 AS BIGINT)"},
+        properties={"enableChangeDataFeed": "true"},
+    )
+    t.append(spark.createDataFrame([(1, 25.0), (2, 7.0)], "id long, amount double"))
+    src = spark.createDataFrame([(1, 52.0)], "id long, amount double")
+    (
+        t.merge(src, "target.id = source.id")
+        .when_matched_update(set={"amount": "source.amount"})
+        .when_not_matched_by_source_update(set={"amount": "target.amount * 3"})
+        .execute()
+    )
+    post = {
+        (r.id, r.amount, r.bucket)
+        for r in t.read_changes(starting_version=t.version())
+        .filter("_change_type = 'update_postimage'")
+        .collect()
+    }
+    assert post == gen_state(t) == {(1, 52.0, 5), (2, 21.0, 2)}
 
 
 # ---------------------------------------------------------------------------
